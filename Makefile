@@ -4,7 +4,7 @@
 PY ?= python
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: test oracle bench smoke
+.PHONY: test oracle bench perfbench smoke
 
 test:
 	$(PY) -m pytest tests/ -q
@@ -18,6 +18,11 @@ oracle:
 
 bench:
 	$(PY) bench.py
+
+# The gated benchmark (BENCHMARK.json): its own tests, then one log_tail run.
+perfbench:
+	$(PY) -m pytest perfbench/tests -q
+	$(PY) perfbench/run.py --workload log_tail --seed 1
 
 # Cheap regression net: every registry query executes at sf0.001.
 smoke:

@@ -598,13 +598,17 @@ class FluxConsumer:
         Lane selection happens AFTER the read plan is computed from
         catalog metadata (no Spark job either way): when the total new
         record count is within ``fast_path_max``, each (topic,
-        partition, range) is served by the footer-pruned pyarrow tail
-        read (``LogStore.read_since`` — ms-class, visibility contract
-        identical to ``read()``), and the result carries plain-Python
-        ``rows`` with the DataFrame built lazily. Bigger drains take the
-        distributed scan exactly as before. Position advancement,
-        pause filtering and liveness are shared code above the branch,
-        so commit/rebalance semantics cannot diverge between lanes."""
+        partition, range) is served by the name- then footer-pruned
+        pyarrow tail read (``LogStore.read_since`` — ms-class, visibility
+        contract identical to ``read()``), and the result carries
+        plain-Python ``rows`` with the DataFrame built lazily. Bigger
+        drains take the distributed scan exactly as before. The read plan,
+        pause filtering and liveness are shared code above the branch, so
+        commit/rebalance semantics cannot diverge between lanes. The
+        Spark lane advances positions at plan time; the fast lane only
+        once its read delivered every planned record, so a fast poll that
+        raises leaves positions where they were and a plain re-poll is
+        safe."""
         self._ensure_live()
         plan: list[tuple[str, dict[int, int], dict[int, int]]] = []
         new_positions = dict(self._positions)
@@ -627,7 +631,6 @@ class FluxConsumer:
                     total_new += end - pos
             if starts:
                 plan.append((t, starts, ends))
-        self._positions = new_positions
         if 0 < total_new <= self.fast_path_max:
             rows: list[dict] = []
             for t, starts, ends in plan:
@@ -638,23 +641,24 @@ class FluxConsumer:
                         )
                     )
             if len(rows) != total_new:
-                # Positions were already advanced from the planned HWMs;
-                # an under-delivering read (pruning bug, file removed
-                # between planning and read after retries) would
-                # otherwise skip records permanently and silently. The
-                # Spark lane surfaces such failures at action time —
-                # make the fast lane equally loud.
+                # An under-delivering read (pruning bug, a file removed
+                # by a compaction swap between planning and read) must
+                # not skip records silently. The Spark lane surfaces
+                # such failures at action time — make the fast lane
+                # equally loud, before positions move.
                 raise RuntimeError(
                     f"fast poll under-delivered: planned {total_new} "
-                    f"records, read {len(rows)}; positions not trusted — "
-                    "seek() to the last committed offsets and re-poll"
+                    f"records, read {len(rows)}; positions not advanced "
+                    "— re-poll"
                 )
+            self._positions = new_positions
             return PollResult(
                 rows=rows,
                 spark=self.store.spark,
                 count=total_new,
                 should_continue=True,
             )
+        self._positions = new_positions
         frames: list[DataFrame] = []
         for t, starts, ends in plan:
             frames.append(

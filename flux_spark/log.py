@@ -15,6 +15,12 @@ under ``warehouse/<topic>/partition=<p>/``:
 * **Partition dir -> partition pruning**: Hive-style ``partition=<p>`` dirs
   mean a (topic, partition, offset) point read prunes to one directory and
   then to one rowgroup.
+* **LogSegment name -> offset-named fast segment**: the reference names each
+  segment by its start offset (``{topic}_partition{p}_{startOffset}.log``,
+  LogSegment.java:72-78). A fast-lane file carries its whole range,
+  ``part-fast-<first:020d>-<last:020d>-<uuid>.parquet``, so the driver-side
+  tail read skips it by name without opening its footer. Files named by
+  Spark (or by older releases) carry no range and are pruned by footer.
 
 Offset assignment (the one genuinely stateful primitive, SURVEY.md §4):
 per-(topic, partition) offsets are contiguous from 0 across appends. The
@@ -41,6 +47,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import re
 import shutil
 import threading
 import uuid
@@ -63,6 +70,9 @@ READ_SCHEMA = StructType(
 )
 
 _ARRIVAL = "__arrival"
+
+# fast-lane segment name; zero padding makes name order equal offset order
+_FAST_SEGMENT = re.compile(r"part-fast-(\d{20})-(\d{20})-[0-9a-f]{32}\.parquet")
 
 
 class LogStore:
@@ -475,12 +485,12 @@ class LogStore:
                 )
                 pdir = Path(self.topic_path(topic)) / f"partition={part}"
                 pdir.mkdir(parents=True, exist_ok=True)
+                last = offsets[-1]
+                name = f"part-fast-{first:020d}-{last:020d}-{uuid.uuid4().hex}"
                 pq.write_table(
-                    table,
-                    pdir / f"part-fast-{uuid.uuid4().hex}.parquet",
-                    compression=codec,
+                    table, pdir / f"{name}.parquet", compression=codec
                 )
-                stats[part] = (first, offsets[-1])
+                stats[part] = (first, last)
 
             # called even for an empty batch so a batch_id is marked
             # committed exactly like the Spark path does
@@ -597,22 +607,29 @@ class LogStore:
     ) -> list[dict]:
         """Low-latency tail read for fresh appends — the fast-path twin of
         ``read(start_offsets=...)`` that answers in milliseconds instead of
-        a Spark-job floor (~1.1 s p50 on this box, BENCH_r09 latency leg).
+        a Spark-job floor.
 
         A queue user polling for records they *just* produced is reading a
         metadata-sized tail of ONE partition; launching a distributed scan
         for that is the wrong execution model. This path stays entirely on
-        the driver: list only the ``partition=<p>`` directory, skip whole
-        files/rowgroups via the Parquet footer min/max statistics on the
+        the driver: list only the ``partition=<p>`` directory, prune by
+        name first — an offset-named fast segment whose range ends below
+        ``offset`` or starts at or above the high-water mark is skipped
+        without being opened — then skip whole files/rowgroups of the
+        remaining files via the Parquet footer min/max statistics on the
         sorted ``offset`` column (the same index the reference keeps as
         IndexEntries, IndexEntries.java:17-54 — here read directly instead
         of through a Spark scan), and decode only the surviving rowgroups
-        with pyarrow.
+        with pyarrow. Files without a range in their name (Spark-lane,
+        maintenance and older fast-lane output) go straight to the footer.
 
         Visibility contract is IDENTICAL to ``read()``: committed records
         only — rows at or above the catalog high-water mark (a torn
-        append's tail) are filtered out, and in-flight files that fail to
-        parse are skipped (they are above the hwm by construction). The
+        append's tail) are filtered out, fast segments above it are never
+        opened, and other files that fail to open are skipped: an
+        in-flight file lies above the hwm by construction, and a file
+        removed by a concurrent compaction swap makes the read come up
+        short, which ``FluxConsumer.poll`` detects and raises on. The
         equivalence is oracle-gated (``log_read_since_fastpath``) and
         measured as the second latency row of bench.py.
 
@@ -637,12 +654,16 @@ class LogStore:
                     ("_", ".")
                 ):
                     continue
+                named = _FAST_SEGMENT.fullmatch(fp.name)
+                if named and (int(named[2]) < lo or int(named[1]) >= hwm):
+                    continue
                 try:
                     pf = pq.ParquetFile(fp)
                 except Exception:
-                    # a writer-in-flight partial file: above the hwm by
-                    # construction (commit-then-visible), so skipping it
-                    # cannot hide committed data
+                    # a writer-in-flight partial file (above the hwm by
+                    # construction, commit-then-visible) or one a
+                    # compaction swap just removed (the read comes up
+                    # short and FluxConsumer.poll raises)
                     continue
                 for rg in range(pf.metadata.num_row_groups):
                     rgm = pf.metadata.row_group(rg)

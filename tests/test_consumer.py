@@ -988,3 +988,34 @@ def test_fast_poll_commit_resume_cycle(topic_store):
     assert r2.rows is not None
     assert r2.count == 15
     assert {r["value"] for r in r2.rows} == {f"v{i}" for i in range(15)}
+
+
+def test_fast_poll_under_delivery_keeps_positions(topic_store, monkeypatch):
+    """A fast poll whose read comes up one record short raises before it
+    moves any position, so a plain re-poll (no seek) delivers every
+    record exactly once."""
+    fill(topic_store, 30)
+    c = FluxConsumer(topic_store, group_id="g")
+    c.subscribe(["t"])
+    before = {p: c.position("t", p) for p in range(3)}
+    real = topic_store.read_since
+    dropped = []
+
+    def lossy(*args, **kwargs):
+        recs = real(*args, **kwargs)
+        if recs and not dropped:
+            dropped.append(recs.pop())
+        return recs
+
+    monkeypatch.setattr(topic_store, "read_since", lossy)
+    with pytest.raises(RuntimeError, match="under-delivered"):
+        c.poll()
+    assert dropped
+    assert {p: c.position("t", p) for p in range(3)} == before
+    monkeypatch.setattr(topic_store, "read_since", real)
+    res = c.poll()
+    assert res.rows is not None and res.count == 30
+    got = [(r["partition"], r["offset"]) for r in res.rows]
+    hwm = topic_store.high_water_marks("t")
+    assert sorted(got) == [(p, o) for p in range(3) for o in range(hwm[p])]
+    assert not c.poll().should_continue

@@ -987,9 +987,12 @@ def test_concurrent_soak_fastlane_under_maintenance(spark, store):
     maintenance contention. One committing group drains EVERY poll via
     the driver-side pyarrow lane (fast_path_max raised above the soak's
     batch sizes) while producers write and an aggressive compaction loop
-    swaps segment directories underneath it. Proves read_since's
-    transient-missing-file retry composes with the fast lane at the same
-    exactly-once, gap-free, zero-lag bar as the Spark lane — and asserts
+    swaps segment directories underneath it. read_since skips a file it
+    cannot open (one a swap just removed), poll raises when the read
+    comes up short of its plan, and the child re-polls — safe, because a
+    raising fast poll leaves positions where they were. Proves that
+    mechanism holds the same exactly-once, gap-free, zero-lag bar as the
+    Spark lane — and asserts
     the polls actually WERE fast-lane served, so the test cannot
     silently degrade into re-covering the Spark path."""
     import json
@@ -1158,6 +1161,119 @@ def test_read_since_hides_torn_append(spark, store, monkeypatch):
     got = store.read_since("fasttorn", 0, 0)
     assert [r["offset"] for r in got] == list(range(10))  # torn tail hidden
     assert store.read("fasttorn", include_uncommitted=True).count() == 20
+
+
+def test_read_since_opens_only_the_tail_segment(spark, store, monkeypatch):
+    """Offset-named fast segments are pruned by name: a tail read inside
+    the last flush opens that one file, not every footer in the
+    partition; a read from 0 still returns every record in order."""
+    import pyarrow.parquet as pq
+
+    store.catalog.create_topic("named", 1)
+    for i in range(60):
+        store.append_rows(
+            "named", [{"value": f"v{i}-{j}", "partition": 0} for j in range(3)]
+        )
+    hwm = store.high_water_marks("named")[0]
+    assert hwm == 180
+    opened = []
+    base = pq.ParquetFile
+
+    class CountingParquetFile(base):
+        def __init__(self, source, *args, **kwargs):
+            opened.append(source)
+            super().__init__(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", CountingParquetFile)
+    for k in (1, 2, 3):
+        opened.clear()
+        got = store.read_since("named", 0, hwm - k)
+        assert [r["offset"] for r in got] == list(range(hwm - k, hwm))
+        assert len(opened) == 1, (k, opened)
+    got = store.read_since("named", 0, 0)
+    assert [r["offset"] for r in got] == list(range(hwm))
+    assert [r["value"] for r in got[:4]] == ["v0-0", "v0-1", "v0-2", "v1-0"]
+
+
+def test_read_since_mixed_segment_layouts_match_spark_read(
+    spark, store, monkeypatch
+):
+    """One partition holding every file layout: offset-named fast
+    segments, a Spark-lane append file, a legacy ``part-fast-<uuid>``
+    file, an offset-named torn flush above the hwm, and an offset-named
+    file of garbage bytes above the hwm. read_since must equal the Spark
+    read for every start offset, and discard_uncommitted must remove both
+    files above the hwm."""
+    import uuid
+    from pathlib import Path
+
+    topic = "mixed"
+    store.catalog.create_topic(topic, 1)
+
+    def fast(tag, n=4):
+        store.append_rows(
+            topic,
+            [
+                {"value": f"{tag}-{j}", "key": f"k{j}", "partition": 0}
+                for j in range(n)
+            ],
+        )
+
+    fast("a")
+    fast("b")
+    store.append(topic, _mk_records(spark, 10, partition=0), ordering_col="seq")
+    fast("c")
+    fast("d")
+    pdir = Path(store.topic_path(topic)) / "partition=0"
+    named = sorted(pdir.glob("part-fast-*.parquet"))
+    assert len(named) == 4
+    # legacy layout: a committed fast segment without a range in its name
+    named[1].rename(pdir / f"part-fast-{uuid.uuid4().hex}.parquet")
+    hwm = store.high_water_marks(topic)[0]
+    assert hwm == 26
+
+    def boom(*a, **k):
+        raise RuntimeError("simulated crash")
+
+    real = store.catalog.advance_hwm
+    monkeypatch.setattr(store.catalog, "advance_hwm", boom)
+    with pytest.raises(RuntimeError):
+        fast("torn")
+    monkeypatch.setattr(store.catalog, "advance_hwm", real)
+    assert store.high_water_marks(topic)[0] == hwm
+    assert any(pdir.glob(f"part-fast-{hwm:020d}-*.parquet"))
+
+    los = (0, 1, hwm // 2, hwm - 1, hwm, hwm + 5)
+    # the Spark reference is taken before the garbage file lands: a Spark
+    # scan cannot read a file that is not Parquet, read_since never opens
+    # one named above the hwm
+    want = {
+        lo: [
+            (r["offset"], r["key"], r["value"])
+            for r in store.read(topic, partitions=[0], start_offsets={0: lo})
+            .orderBy("offset")
+            .collect()
+        ]
+        for lo in los
+    }
+    garbage = pdir / (
+        f"part-fast-{hwm + 50:020d}-{hwm + 59:020d}-{uuid.uuid4().hex}.parquet"
+    )
+    garbage.write_bytes(b"not a parquet file")
+    for lo in los:
+        got = [
+            (r["offset"], r["key"], r["value"])
+            for r in store.read_since(topic, 0, lo)
+        ]
+        assert got == want[lo], lo
+    assert [o for o, _, _ in want[0]] == list(range(hwm))
+
+    assert store.discard_uncommitted(topic) == 2
+    assert not garbage.exists()
+    assert not any(pdir.glob(f"part-fast-{hwm:020d}-*.parquet"))
+    assert [r["offset"] for r in store.read_since(topic, 0, 0)] == list(
+        range(hwm)
+    )
 
 
 def test_append_rows_fastpath_matches_spark_append(spark, store):

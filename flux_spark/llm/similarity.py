@@ -100,6 +100,100 @@ def pair_cosine_arrow(a: Column, b: Column) -> Column:
     return _pc(a, b)
 
 
+# Per-task bound on in-kernel cosine grids (float64 cells). Column chunks
+# are sized so one chunk never exceeds this many cells, keeping a
+# duplicate-heavy mega-cluster from OOMing its task (~256 MB at 32M).
+# Module-level so tests can force multi-chunk execution on small inputs;
+# kernels capture it by value when they are built, because their closures
+# ship to Python workers, which re-import this module and would not see a
+# test's monkeypatched value.
+_GRID_CHUNK_TARGET = 32_000_000
+
+
+def _f64_rows(vecs):
+    """Stack a batch of vectors into a float64 matrix, widening float32
+    exactly FIRST, as the Catalyst fold casts each element before it
+    multiplies."""
+    import numpy as np
+
+    return np.stack(vecs).astype(np.float64)
+
+
+def _dimloop_norms(A):
+    """Row norms of ``A`` with the dimension-loop float64 fold of
+    :func:`norm`."""
+    import numpy as np
+
+    acc = np.zeros(A.shape[0])
+    for i in range(A.shape[1]):
+        acc += A[:, i] * A[:, i]
+    return np.sqrt(acc)
+
+
+def _dimloop_cosine(A, C, na=None, nc=None):
+    """Rows-x-columns cosine grid of float64 matrices with the module's
+    canonical fold: looping over DIMENSIONS while numpy vectorizes over
+    the grid gives every (row, column) pair the left-to-right float64
+    multiply-add sequence of :func:`cosine` and the DuckDB oracle, so each
+    score is bit-identical to theirs for any row or column subset.
+    ``na``/``nc`` are the row/column norms when the caller already holds
+    them."""
+    import numpy as np
+
+    acc = np.zeros((A.shape[0], C.shape[0]))
+    for i in range(A.shape[1]):
+        acc += A[:, i, None] * C[None, :, i]
+    na = _dimloop_norms(A) if na is None else na
+    nc = _dimloop_norms(C) if nc is None else nc
+    return acc / (na[:, None] * nc[None, :])
+
+
+def _cosine_blocks(A, C, chunk_target, na, nc, start=0):
+    """Yield ``(cols, cos)`` column blocks of the ``A`` x ``C[start:]``
+    cosine grid, each at most ~``chunk_target`` cells (and 4096 columns),
+    so a hot bucket or cluster cannot OOM its task. Scores do not depend
+    on the chunking."""
+    import numpy as np
+
+    ch = max(1, min(4096, -(-chunk_target // len(A))))
+    for s in range(start, len(C), ch):
+        e = min(s + ch, len(C))
+        yield np.arange(s, e), _dimloop_cosine(A, C[s:e], na, nc[s:e])
+
+
+def _self_grid_hits(vecs, threshold, chunk_target):
+    """Yield ``(cols, hit, cos)`` column blocks of a group's self cosine
+    grid, where ``hit`` marks the upper-triangle pairs (row < col) whose
+    cosine passes ``threshold``. Row/column indices are positions in
+    ``vecs``."""
+    import numpy as np
+
+    V = _f64_rows(vecs)
+    nrm = _dimloop_norms(V)
+    rows = np.arange(len(V))[:, None]
+    for cols, cos in _cosine_blocks(V, V, chunk_target, nrm, nrm, start=1):
+        # Spark SQL orders NaN ABOVE every number, so the Catalyst filter
+        # these kernels replaced kept NaN cosines (zero-norm or NaN
+        # vectors); numpy's NaN >= t is False — replicate Spark's
+        # semantics so degenerate inputs cannot diverge from the SQL
+        # oracle
+        yield cols, (rows < cols) & ((cos >= threshold) | np.isnan(cos)), cos
+
+
+def _nonnull_map(v, score):
+    """Arrow batch ``v`` of vectors -> Series holding ``score(A)[j]`` for
+    the j-th non-NULL vector, where ``A`` is their float64 matrix; a
+    NULL vector yields NULL, like the Catalyst fold, never an executor
+    crash."""
+    import pandas as pd
+
+    good = v.notna().to_numpy()
+    res = iter(score(_f64_rows(v[good].to_numpy())) if good.any() else ())
+    # object dtype: a numeric Series would turn None into NaN and round
+    # int64 ids through float64
+    return pd.Series([next(res) if g else None for g in good], dtype=object)
+
+
 def sql_dot(a: str, b: str, dim: int) -> str:
     """DuckDB twin of :func:`dot` — same order, same widening."""
     return (
@@ -646,16 +740,12 @@ def lsh_near_dup_pairs(
     s = corpus.select(
         F.col(id_col), F.col(vec_col), signature_bits(F.col(vec_col), planes).alias("__sig")
     )
-    # r13 (guide §8 / §4.2, same pattern as _bucket_grid_scores and the
-    # SemDeDup cluster kernel): the shuffle_hash self-join materialized
+    # r13 (guide §8 / §4.2): the shuffle_hash self-join materialized
     # every in-bucket candidate pair and shipped BOTH vectors per pair to
-    # pair_cosine_arrow. Grouping the bucket once ships each vector ONCE,
-    # scores the triangle as a numpy grid with the identical sequential
-    # float64 fold (f32 widened first, per-vector norms accumulated
-    # dimension-by-dimension exactly as pair_cosine_arrow does per pair),
-    # and applies id_a < id_b and the threshold in-kernel — only
-    # qualifying near-dup pairs leave Python. Column chunks bound the
-    # grid per task (duplicated-mass buckets cannot OOM).
+    # pair_cosine_arrow. Grouping the bucket once ships each vector ONCE;
+    # _self_grid_hits scores its triangle with the bit-identical fold in
+    # column chunks (duplicated-mass buckets cannot OOM), and only
+    # qualifying near-dup pairs leave Python.
     id_t = dict(s.dtypes)[id_col]
     chunk_target = _GRID_CHUNK_TARGET
 
@@ -663,53 +753,18 @@ def lsh_near_dup_pairs(
         import numpy as np
         import pandas as pd
 
-        # empty frames inherit the id column's ACTUAL dtype from the
-        # input batch (ADVICE r13: a hardcoded int64 Series relied on an
-        # Arrow cast that non-int64 id columns may refuse at runtime)
-        def _empty():
-            return pd.DataFrame(
-                {
-                    "id_a": pdf[id_col].iloc[0:0],
-                    "id_b": pdf[id_col].iloc[0:0],
-                    "cos_sim": pd.Series(dtype="float64"),
-                }
-            )
-
-        n = len(pdf)
-        if n < 2:
-            return _empty()
         pdf = pdf.sort_values(id_col)
         ids = pdf[id_col].to_numpy()
-        V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        nrm = np.zeros(n, dtype=np.float64)
-        for d in range(V.shape[1]):
-            nrm += V[:, d] * V[:, d]
-        nrm = np.sqrt(nrm)
-        out_a, out_b, out_c = [], [], []
-        ch = max(1, min(4096, (chunk_target + n - 1) // n))
-        rows = np.arange(n)
-        for cs in range(1, n, ch):
-            ce = min(cs + ch, n)
-            acc = np.zeros((n, ce - cs), dtype=np.float64)
-            for d in range(V.shape[1]):
-                acc += V[:, d : d + 1] * V[cs:ce, d][None, :]
-            cos = acc / (nrm[:, None] * nrm[None, cs:ce])
-            cols = np.arange(cs, ce)
-            # Spark SQL orders NaN ABOVE every number, so the Catalyst
-            # filter this kernel replaces kept NaN cosines (zero-norm or
-            # NaN vectors); numpy's NaN >= t is False — replicate Spark's
-            # semantics so degenerate inputs cannot diverge from the
-            # previous path or the SQL oracle
-            hit = (rows[:, None] < cols[None, :]) & (
-                (cos >= threshold) | np.isnan(cos)
-            )
+        # seeded with ids[:0] so an empty frame keeps the id column's
+        # ACTUAL dtype (ADVICE r13: a hardcoded int64 relied on an Arrow
+        # cast that non-int64 id columns may refuse at runtime)
+        out_a, out_b, out_c = [ids[:0]], [ids[:0]], [np.empty(0)]
+        hits = _self_grid_hits(pdf[vec_col].to_numpy(), threshold, chunk_target)
+        for cols, hit, cos in hits:
             ri, ci = np.nonzero(hit)
-            if len(ri):
-                out_a.append(ids[ri])
-                out_b.append(ids[cols[ci]])
-                out_c.append(cos[ri, ci])
-        if not out_a:
-            return _empty()
+            out_a.append(ids[ri])
+            out_b.append(ids[cols[ci]])
+            out_c.append(cos[ri, ci])
         return pd.DataFrame(
             {
                 "id_a": np.concatenate(out_a),
@@ -732,24 +787,14 @@ def lsh_near_dup_pairs(
     )
 
 
-# Per-task bound on in-kernel cosine grids (float64 cells). Column chunks
-# are sized so one chunk never exceeds this many cells, keeping a
-# duplicate-heavy mega-cluster from OOMing its task (~256 MB at 32M).
-# Module-level so tests can force multi-chunk execution on small inputs.
-_GRID_CHUNK_TARGET = 32_000_000
-
-
 def _bucket_grid_scores(q: DataFrame, c: DataFrame) -> DataFrame:
     """Cogrouped per-bucket cosine grid for the self-ANN bucket join.
 
     ``q``: (query_id, __qv, __qnorm, __sig) probe rows; ``c``:
     (neighbor_id, __cv, __cnorm, __sig) capped corpus rows. Emits every
     in-bucket (query, neighbor) pair with ``cos_sim`` bit-identical to
-    ``dot(__qv, __cv) / (__qnorm * __cnorm)``: the kernel widens the
-    float32 vectors to float64 FIRST (the fold casts each element before
-    multiplying) and accumulates dimension-by-dimension, so each pair sees
-    the same left-to-right float64 op sequence while numpy vectorizes
-    across the Q x C bucket grid. Group payloads are bounded by the
+    ``dot(__qv, __cv) / (__qnorm * __cnorm)`` (the :func:`_dimloop_cosine`
+    fold over the Catalyst norms). Group payloads are bounded by the
     occupancy cap on the corpus side (<= cap rows) and by
     probes x occupancy on the query side, so per-group memory is
     O(Q x C) <= O(probes x occupancy x cap) — the same candidate mass the
@@ -760,60 +805,43 @@ def _bucket_grid_scores(q: DataFrame, c: DataFrame) -> DataFrame:
     out_schema = (
         f"query_id {id_t}, neighbor_id {nid_t}, cos_sim double"
     )
-    # captured by value at construction time (see _cluster_dups): the
-    # closure ships to Python workers, which re-import this module
     chunk_target = _GRID_CHUNK_TARGET
 
     def _score(qpdf, cpdf):
         import numpy as np
         import pandas as pd
 
-        if qpdf.empty or cpdf.empty:
-            # empty frames inherit the id columns' ACTUAL dtypes from
-            # the input batches (ADVICE r13 — cogroup hands each side
-            # with its declared schema even when empty)
-            return pd.DataFrame(
-                {
-                    "query_id": qpdf["query_id"].iloc[0:0],
-                    "neighbor_id": cpdf["neighbor_id"].iloc[0:0],
-                    "cos_sim": pd.Series(dtype="float64"),
-                }
+        qid = qpdf["query_id"].to_numpy()
+        nid = cpdf["neighbor_id"].to_numpy()
+        # seeded with the input batches' empty ids so an empty frame keeps
+        # their ACTUAL dtypes (ADVICE r13 — cogroup hands each side with
+        # its declared schema even when empty)
+        out_q, out_n, out_c = [qid[:0]], [nid[:0]], [np.empty(0)]
+        if len(qid) and len(nid):
+            # chunked on the corpus side (ADVICE r13 medium): lsh_topk's
+            # default bucket_cap=None concentrates a duplicated-mass hot
+            # bucket in one group; the qid/nid expansion is built per
+            # chunk AFTER the keep mask
+            blocks = _cosine_blocks(
+                _f64_rows(qpdf["__qv"].to_numpy()),
+                _f64_rows(cpdf["__cv"].to_numpy()),
+                chunk_target,
+                qpdf["__qnorm"].to_numpy(),
+                cpdf["__cnorm"].to_numpy(),
             )
-        qm = np.stack(qpdf["__qv"].to_numpy()).astype(np.float64)
-        cm = np.stack(cpdf["__cv"].to_numpy()).astype(np.float64)
-        qn = qpdf["__qnorm"].to_numpy()
-        cn = cpdf["__cnorm"].to_numpy()
-        qid_all = qpdf["query_id"].to_numpy()
-        nid_all = cpdf["neighbor_id"].to_numpy()
-        nq = qm.shape[0]
-        # chunk the corpus side like the sibling kernels (ADVICE r13
-        # medium): lsh_topk's default bucket_cap=None means a self-query
-        # on a duplicated-mass corpus concentrates a whole hot bucket in
-        # one group — bound the grid (and the qid/nid expansion, built
-        # per chunk AFTER the keep mask) at ~chunk_target float64 cells
-        # per step instead of materializing Q x C in one shot
-        ch = max(1, min(cm.shape[0], (chunk_target + nq - 1) // nq))
-        outs = []
-        for cs in range(0, cm.shape[0], ch):
-            ce = min(cs + ch, cm.shape[0])
-            acc = np.zeros((nq, ce - cs), dtype=np.float64)
-            for d in range(qm.shape[1]):
-                acc += qm[:, d : d + 1] * cm[None, cs:ce, d]
-            cos = acc / (qn[:, None] * cn[None, cs:ce])
-            qid = np.repeat(qid_all, ce - cs)
-            nid = np.tile(nid_all[cs:ce], nq)
-            keep = qid != nid
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "query_id": qid[keep],
-                        "neighbor_id": nid[keep],
-                        "cos_sim": cos.ravel()[keep],
-                    }
-                )
-            )
-        return outs[0] if len(outs) == 1 else pd.concat(
-            outs, ignore_index=True
+            for cols, cos in blocks:
+                qi = np.repeat(qid, len(cols))
+                ni = np.tile(nid[cols], len(qid))
+                keep = qi != ni
+                out_q.append(qi[keep])
+                out_n.append(ni[keep])
+                out_c.append(cos.ravel()[keep])
+        return pd.DataFrame(
+            {
+                "query_id": np.concatenate(out_q),
+                "neighbor_id": np.concatenate(out_n),
+                "cos_sim": np.concatenate(out_c),
+            }
         )
 
     # null signatures never matched in the equi-joins this kernel
@@ -995,11 +1023,9 @@ def lsh_topk(
         # interpreted fold per pair (dot: 133 s pre-norms, ~25 s after).
         # Cogrouping by signature instead moves each vector across the
         # boundary once per BUCKET MEMBERSHIP (corpus: once, query: once
-        # per probe) and scores the whole bucket as one numpy grid —
-        # acc += q[:, d] ⊗ c[:, d] in dimension order is, per pair,
-        # exactly the left-to-right float64 multiply-add sequence of the
-        # Catalyst fold, so scores stay bit-identical (sf10: 59.4M pairs,
-        # fold score+rank 38-41 s -> 9-10 s). Selective-query callers
+        # per probe) and scores the whole bucket as one bit-identical
+        # _dimloop_cosine grid (sf10: 59.4M pairs, fold score+rank
+        # 38-41 s -> 9-10 s). Selective-query callers
         # (ann_cosine_lsh's 5-vector batch) keep the broadcast equi-join
         # below: cogroup would shuffle and ship the WHOLE corpus to
         # Python where the join touches only the probed buckets.
@@ -1167,9 +1193,8 @@ def _centroid_assign_arrow(cents: list[tuple[int, list[float]]]):
     ``cents`` must be sorted by centroid id ascending — ties on equal
     cosine then resolve to the LOWEST id via ``argmax``'s first-occurrence
     rule, matching the ROW_NUMBER (cos DESC, cid ASC) oracle exactly.
-    Accumulation loops over dimensions so each (vector, centroid) pair
-    sees the identical left-to-right float64 multiply-add sequence as the
-    Catalyst fold in :func:`cosine` (see :func:`pair_cosine_arrow`).
+    Scores are the :func:`_dimloop_cosine` fold, bit-identical to the
+    Catalyst fold in :func:`cosine`. A NULL vector gets a NULL cluster.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -1179,22 +1204,12 @@ def _centroid_assign_arrow(cents: list[tuple[int, list[float]]]):
     @pandas_udf("long")
     def _assign(v):
         import numpy as np
-        import pandas as pd
 
         ids = np.asarray(cids, dtype=np.int64)
         C = np.asarray(cmat, dtype=np.float64)  # K x dim
-        A = np.array(v.tolist(), dtype=np.float64)  # B x dim
-        if A.ndim != 2 or len(A) == 0:
-            return pd.Series(np.empty(0, dtype=np.int64))
-        acc = np.zeros((A.shape[0], C.shape[0]))
-        na = np.zeros(A.shape[0])
-        nc = np.zeros(C.shape[0])
-        for i in range(A.shape[1]):
-            acc += A[:, i, None] * C[None, :, i]
-            na += A[:, i] * A[:, i]
-            nc += C[:, i] * C[:, i]
-        cos = acc / (np.sqrt(na)[:, None] * np.sqrt(nc)[None, :])
-        return pd.Series(ids[np.argmax(cos, axis=1)])
+        return _nonnull_map(
+            v, lambda A: ids[np.argmax(_dimloop_cosine(A, C), axis=1)]
+        )
 
     return _assign
 
@@ -1305,43 +1320,43 @@ def _centroid_assign_hier_arrow(
     @pandas_udf("long")
     def _assign(v):
         import numpy as np
-        import pandas as pd
 
         ids = np.asarray(ids_l, dtype=np.int64)
         C = np.asarray(cmat, dtype=np.float64)
-        A = np.array(v.tolist(), dtype=np.float64)
-        if A.ndim != 2 or len(A) == 0:
-            return pd.Series(np.empty(0, dtype=np.int64))
-        routed = _hier_route2(A, C, n_b, coarse_probes)
-        best_cos = np.full(A.shape[0], -np.inf)
-        best_cid = np.full(A.shape[0], np.iinfo(np.int64).max, dtype=np.int64)
-        for b in np.unique(routed):
-            mem = np.asarray(members_l[b], dtype=np.int64)
-            m = (routed == b).any(axis=1)
-            if mem.size == 0 or not m.any():
-                continue
-            cos = _dimloop_cosine(A[m], C[mem])
-            loc = np.argmax(cos, axis=1)  # first occurrence -> lowest cid
-            val = cos[np.arange(cos.shape[0]), loc]
-            cand = ids[mem[loc]]
-            idx = np.where(m)[0]
-            upd = (val > best_cos[idx]) | (
-                (val == best_cos[idx]) & (cand < best_cid[idx])
-            )
-            best_cos[idx[upd]] = val[upd]
-            best_cid[idx[upd]] = cand[upd]
-        sentinel = best_cid == np.iinfo(np.int64).max
-        if sentinel.any():
-            # Degenerate routing: both routed branches were empty (only
-            # possible when duplicate representative vectors leave a
-            # branch memberless). Fall back to the flat argmax over ALL
-            # centroids for those rows — same dimension-loop fold, same
-            # ties->lowest-id rule — so the kernel never emits the
-            # sentinel and stays aligned with the oracle's route-join
-            # (which scores real centroids only).
-            cos = _dimloop_cosine(A[sentinel], C)
-            best_cid[sentinel] = ids[np.argmax(cos, axis=1)]
-        return pd.Series(best_cid)
+
+        def _best(A):
+            routed = _hier_route2(A, C, n_b, coarse_probes)
+            best_cos = np.full(A.shape[0], -np.inf)
+            best_cid = np.full(A.shape[0], np.iinfo(np.int64).max, dtype=np.int64)
+            for b in np.unique(routed):
+                mem = np.asarray(members_l[b], dtype=np.int64)
+                m = (routed == b).any(axis=1)
+                if mem.size == 0 or not m.any():
+                    continue
+                cos = _dimloop_cosine(A[m], C[mem])
+                loc = np.argmax(cos, axis=1)  # first occurrence -> lowest cid
+                val = cos[np.arange(cos.shape[0]), loc]
+                cand = ids[mem[loc]]
+                idx = np.where(m)[0]
+                upd = (val > best_cos[idx]) | (
+                    (val == best_cos[idx]) & (cand < best_cid[idx])
+                )
+                best_cos[idx[upd]] = val[upd]
+                best_cid[idx[upd]] = cand[upd]
+            sentinel = best_cid == np.iinfo(np.int64).max
+            if sentinel.any():
+                # Degenerate routing: both routed branches were empty (only
+                # possible when duplicate representative vectors leave a
+                # branch memberless). Fall back to the flat argmax over ALL
+                # centroids for those rows — same dimension-loop fold, same
+                # ties->lowest-id rule — so the kernel never emits the
+                # sentinel and stays aligned with the oracle's route-join
+                # (which scores real centroids only).
+                cos = _dimloop_cosine(A[sentinel], C)
+                best_cid[sentinel] = ids[np.argmax(cos, axis=1)]
+            return best_cid
+
+        return _nonnull_map(v, _best)
 
     return _assign
 
@@ -1367,53 +1382,34 @@ def _centroid_probe_hier_arrow(
     @pandas_udf("array<long>")
     def _probe(v):
         import numpy as np
-        import pandas as pd
 
         ids = np.asarray(ids_l, dtype=np.int64)
         C = np.asarray(cmat, dtype=np.float64)
-        vals = v.tolist()
-        good = [x for x in vals if x is not None]
-        if not good:
-            return pd.Series([None] * len(vals))
-        A = np.array(good, dtype=np.float64)
-        routed = _hier_route2(A, C, n_b, coarse_probes)
-        cand: list[list] = [[] for _ in range(A.shape[0])]
-        for b in np.unique(routed):
-            mem = np.asarray(members_l[b], dtype=np.int64)
-            m = (routed == b).any(axis=1)
-            if mem.size == 0 or not m.any():
-                continue
-            cos = _dimloop_cosine(A[m], C[mem])
-            # stable sort on -cos: equal cosines keep ascending-id order
-            order = np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]
-            take = cos[np.arange(cos.shape[0])[:, None], order]
-            cid = ids[mem[order]]
-            for r, cs, cds in zip(np.where(m)[0], take, cid):
-                cand[r].extend(zip(cs.tolist(), cds.tolist()))
-        res = []
-        for lst in cand:
-            lst.sort(key=lambda t: (-t[0], t[1]))
-            res.append([c for _, c in lst[:nprobe]])
-        probed = iter(res)
-        return pd.Series([None if x is None else next(probed) for x in vals])
+
+        def _top(A):
+            routed = _hier_route2(A, C, n_b, coarse_probes)
+            cand: list[list] = [[] for _ in range(A.shape[0])]
+            for b in np.unique(routed):
+                mem = np.asarray(members_l[b], dtype=np.int64)
+                m = (routed == b).any(axis=1)
+                if mem.size == 0 or not m.any():
+                    continue
+                cos = _dimloop_cosine(A[m], C[mem])
+                # stable sort on -cos: equal cosines keep ascending-id order
+                order = np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]
+                take = cos[np.arange(cos.shape[0])[:, None], order]
+                cid = ids[mem[order]]
+                for r, cs, cds in zip(np.where(m)[0], take, cid):
+                    cand[r].extend(zip(cs.tolist(), cds.tolist()))
+            res = []
+            for lst in cand:
+                lst.sort(key=lambda t: (-t[0], t[1]))
+                res.append([c for _, c in lst[:nprobe]])
+            return res
+
+        return _nonnull_map(v, _top)
 
     return _probe
-
-
-def _dimloop_cosine(A, C):
-    """Batch cosine with the module's canonical left-to-right
-    dimension-loop float64 fold (see :func:`_centroid_assign_arrow`) —
-    bit-identical per (row, centroid) pair for any column subset."""
-    import numpy as np
-
-    acc = np.zeros((A.shape[0], C.shape[0]))
-    na = np.zeros(A.shape[0])
-    nc = np.zeros(C.shape[0])
-    for i in range(A.shape[1]):
-        acc += A[:, i, None] * C[None, :, i]
-        na += A[:, i] * A[:, i]
-        nc += C[:, i] * C[:, i]
-    return acc / (np.sqrt(na)[:, None] * np.sqrt(nc)[None, :])
 
 
 def centroid_branches(
@@ -1449,7 +1445,7 @@ def assign_centroids(
     :func:`hier_branches`). One narrow corpus pass, centroids are a
     driver-collected model; the shared assignment stage of
     semantic_dedup / IVF, exposed for derivation gates and pipelines
-    that only need the routing."""
+    that only need the routing. A NULL embedding gets a NULL cluster_id."""
     cents = sorted(
         (int(r[0]), [float(x) for x in r[1]])
         for r in centroids.select(centroid_id_col, vec_col).collect()
@@ -1479,30 +1475,16 @@ def _centroid_probe_arrow(cents: list[tuple[int, list[float]]], nprobe: int):
     @pandas_udf("array<long>")
     def _probe(v):
         import numpy as np
-        import pandas as pd
 
         ids = np.asarray(cids, dtype=np.int64)
         C = np.asarray(cmat, dtype=np.float64)  # K x dim
-        out = []
-        vals = v.tolist()
-        good = [x for x in vals if x is not None]
-        if good:
-            A = np.array(good, dtype=np.float64)  # B x dim
-            acc = np.zeros((A.shape[0], C.shape[0]))
-            na = np.zeros(A.shape[0])
-            nc = np.zeros(C.shape[0])
-            for i in range(A.shape[1]):
-                acc += A[:, i, None] * C[None, :, i]
-                na += A[:, i] * A[:, i]
-                nc += C[:, i] * C[:, i]
-            cos = acc / (np.sqrt(na)[:, None] * np.sqrt(nc)[None, :])
+
+        def _top(A):
             # stable sort on -cos: equal cosines keep ascending-id order
-            order = np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]
-            probed = iter(ids[order].tolist())
-            out = [None if x is None else next(probed) for x in vals]
-        else:
-            out = [None] * len(vals)
-        return pd.Series(out)
+            order = np.argsort(-_dimloop_cosine(A, C), axis=1, kind="stable")
+            return ids[order[:, :nprobe]].tolist()
+
+        return _nonnull_map(v, _top)
 
     return _probe
 
@@ -1651,7 +1633,7 @@ def semantic_dedup(
 
     Returns one row per corpus vector: (id, cluster_id, dup_of, is_kept)
     where ``dup_of`` is the smallest qualifying cluster-mate id (NULL
-    for kept vectors).
+    for kept vectors). A NULL embedding has a NULL cluster_id and is kept.
 
     Scale shape: pair cost is Σ|cluster|² — K must grow with the corpus
     (see :func:`auto_centroids`) exactly as LSH planes must
@@ -1701,72 +1683,33 @@ def semantic_dedup(
     assigned = corpus.select(
         F.col(id_col), F.col(vec_col), assign(F.col(vec_col)).alias("cluster_id")
     ).persist()
-    # r13 (guide §8 / §4.2, same pattern as the lsh_topk bucket grid): the
-    # previous shuffle_hash self-join materialized Σ|cluster|² pair rows,
-    # each carrying BOTH vectors across the Python boundary into
-    # pair_cosine_arrow. A grouped kernel per cluster ships each vector
-    # ONCE, scores the in-cluster grid with the identical sequential
-    # float64 fold (norms accumulated dimension-by-dimension exactly as
-    # pair_cosine_arrow does per pair), and fuses the id_a < id_b filter,
-    # the >= threshold test and the MIN(id_a) verdict in-kernel — only
-    # (id, dup_of) rows for actual duplicates ever leave Python. Columns
-    # are processed in chunks sized to bound the grid at ~32M float64s so
-    # a duplicate-heavy mega-cluster cannot OOM a task.
+    # r13 (guide §8 / §4.2): the previous shuffle_hash self-join
+    # materialized Σ|cluster|² pair rows, each carrying BOTH vectors
+    # across the Python boundary into pair_cosine_arrow. A grouped kernel
+    # per cluster ships each vector ONCE; _self_grid_hits scores the
+    # in-cluster triangle with the bit-identical fold in column chunks (a
+    # duplicate-heavy mega-cluster cannot OOM a task), and the MIN(id_a)
+    # verdict is fused in-kernel — only (id, dup_of) rows for actual
+    # duplicates ever leave Python.
     id_t = dict(assigned.dtypes)[id_col]
-    # captured by value at construction time: the closure ships to Python
-    # workers, which re-import this module — a module-global reference
-    # would not see a test's monkeypatched value
     chunk_target = _GRID_CHUNK_TARGET
 
     def _cluster_dups(pdf):
         import numpy as np
         import pandas as pd
 
-        # empty frames inherit the id column's ACTUAL dtype from the
-        # input batch (ADVICE r13)
-        def _empty():
-            return pd.DataFrame(
-                {
-                    id_col: pdf[id_col].iloc[0:0],
-                    "dup_of": pdf[id_col].iloc[0:0],
-                }
-            )
-
-        n = len(pdf)
-        if n < 2:
-            return _empty()
         pdf = pdf.sort_values(id_col)
         ids = pdf[id_col].to_numpy()
-        V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        nrm = np.zeros(n, dtype=np.float64)
-        for d in range(V.shape[1]):
-            nrm += V[:, d] * V[:, d]
-        nrm = np.sqrt(nrm)
-        out_ids, out_dup = [], []
-        ch = max(1, min(4096, (chunk_target + n - 1) // n))
-        rows = np.arange(n)
-        for s in range(1, n, ch):
-            e = min(s + ch, n)
-            acc = np.zeros((n, e - s), dtype=np.float64)
-            for d in range(V.shape[1]):
-                acc += V[:, d : d + 1] * V[s:e, d][None, :]
-            cos = acc / (nrm[:, None] * nrm[None, s:e])
-            cols = np.arange(s, e)
-            # NaN-is-greatest, matching Spark SQL's comparison semantics
-            # (see the near-dup kernel note): the Catalyst >= this fuses
-            # kept NaN cosines from zero-norm/NaN vectors
-            hit = (rows[:, None] < cols[None, :]) & (
-                (cos >= threshold) | np.isnan(cos)
-            )
+        # seeded with ids[:0] so an empty frame keeps the id column's
+        # ACTUAL dtype (ADVICE r13)
+        out_ids, out_dup = [ids[:0]], [ids[:0]]
+        hits = _self_grid_hits(pdf[vec_col].to_numpy(), threshold, chunk_target)
+        for cols, hit, _cos in hits:
             any_b = hit.any(axis=0)
-            if any_b.any():
-                # rows are in ascending id order, so the first qualifying
-                # row index IS MIN(id_a)
-                first_a = hit.argmax(axis=0)
-                out_ids.append(ids[cols[any_b]])
-                out_dup.append(ids[first_a[any_b]])
-        if not out_ids:
-            return _empty()
+            # rows are in ascending id order, so the first qualifying row
+            # index IS MIN(id_a)
+            out_ids.append(ids[cols[any_b]])
+            out_dup.append(ids[hit.argmax(axis=0)[any_b]])
         return pd.DataFrame(
             {
                 id_col: np.concatenate(out_ids),
@@ -1774,10 +1717,9 @@ def semantic_dedup(
             }
         )
 
-    # null cluster ids never matched in the self-join this kernel
-    # replaced (NULL == NULL is not TRUE) — keep them out of the group
-    # (ADVICE r13; the assign kernel never emits NULL, so this is a
-    # semantics pin, not a behavior change)
+    # null cluster ids (NULL embeddings) never matched in the self-join
+    # this kernel replaced (NULL == NULL is not TRUE) — keep them out of
+    # the group (ADVICE r13); the left join below keeps those rows
     dups = (
         assigned.where(F.col("cluster_id").isNotNull())
         .groupBy("cluster_id")

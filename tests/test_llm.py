@@ -819,14 +819,22 @@ def test_semantic_dedup_within_cluster_only(spark):
     assert out[20].cluster_id != out[10].cluster_id
 
 
-def test_semantic_dedup_grid_chunking_invariant(spark, monkeypatch):
-    """The in-kernel cluster grid processes columns in chunks; forcing
-    1-column chunks must produce the exact same verdicts as one big grid
-    (chunk boundaries cannot change MIN(id_a) or drop a duplicate)."""
+@pytest.mark.parametrize(
+    "emit", ["near_dup_pairs", "min_id_verdict", "cross_scores"]
+)
+def test_grid_chunking_invariant(spark, monkeypatch, emit):
+    """Every grid kernel scores its candidates in column chunks of at
+    most _GRID_CHUNK_TARGET cells; forcing 1-cell chunks must give the
+    exact same rows as one big grid, for each emit rule: near-dup pairs
+    (lsh_near_dup_pairs), the MIN(id_a) verdict (semantic_dedup) and the
+    cross scores (_bucket_grid_scores). Chunk boundaries cannot change a
+    score, MIN(id_a) or drop a pair, and rows with NULL signatures never
+    pair (the equi-join semantics the cogroup replaced)."""
     import random
 
     rnd = random.Random(7)
-    # one cluster: 12 vectors, several near-dup groups with interleaved ids
+    # one bucket/cluster: 12 vectors, several near-dup groups with
+    # interleaved ids
     base = [[1.0, 0.0, 0.0, 0.0], [0.9, 0.43, 0.0, 0.0], [0.7, 0.7, 0.14, 0.0]]
     rows = []
     for i in range(12):
@@ -834,67 +842,116 @@ def test_semantic_dedup_grid_chunking_invariant(spark, monkeypatch):
         eps = [(rnd.random() - 0.5) * 1e-4 for _ in b]
         rows.append((i, [x + e for x, e in zip(b, eps)]))
     corpus = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    cen = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0])], "centroid_id long, v array<double>"
-    )
+    if emit == "near_dup_pairs":
 
-    def run():
-        return sorted(
-            map(
-                tuple,
-                similarity.semantic_dedup(
-                    corpus, cen, vec_col="v", threshold=0.98
-                ).collect(),
+        def run():
+            return similarity.lsh_near_dup_pairs(
+                corpus, vec_col="v", n_planes=1, dim=4, threshold=0.98
             )
+
+    elif emit == "min_id_verdict":
+        cen = spark.createDataFrame(
+            [(0, [1.0, 0.0, 0.0, 0.0])], "centroid_id long, v array<double>"
         )
 
-    big = run()
+        def run():
+            return similarity.semantic_dedup(
+                corpus, cen, vec_col="v", threshold=0.98
+            )
+
+    else:
+        rows_c = [
+            (1, [1.0, 0.0], 1.0, 5),
+            (2, [0.8, 0.6], 1.0, 5),
+            (3, [0.0, 1.0], 1.0, 5),
+            (4, [0.5, 0.5], 0.7071067811865476, None),
+            (9, [0.5, 0.5], 0.7071067811865476, None),
+        ]
+        c = spark.createDataFrame(
+            rows_c,
+            "neighbor_id long, __cv array<double>, __cnorm double, __sig long",
+        )
+        q = spark.createDataFrame(
+            rows_c,
+            "query_id long, __qv array<double>, __qnorm double, __sig long",
+        )
+
+        def run():
+            return similarity._bucket_grid_scores(q, c)
+
+    big = sorted(map(tuple, run().collect()))
     monkeypatch.setattr(similarity, "_GRID_CHUNK_TARGET", 1)
-    tiny = run()
+    tiny = sorted(map(tuple, run().collect()))
     assert big == tiny
-    # sanity: the threshold actually split the groups (dups exist)
-    assert any(t[2] is not None for t in big)
+    if emit == "near_dup_pairs":
+        # only same-group pairs pass the threshold, and every group's
+        # 4 members pair up: 3 groups x C(4, 2) = 18 pairs
+        assert len(big) == 18
+        assert all(a % 3 == b % 3 and a < b for a, b, _ in big)
+    elif emit == "min_id_verdict":
+        # sanity: the threshold actually split the groups (dups exist)
+        assert any(t[2] is not None for t in big)
+    else:
+        # bucket 5 has 3 vectors -> 6 ordered non-self pairs; the two
+        # null-sig rows contribute nothing (old equi-join semantics)
+        assert len(big) == 6
+        assert all(qid != 4 and qid != 9 for qid, _, _ in big)
 
 
-def test_bucket_grid_scores_chunking_and_null_sigs(spark, monkeypatch):
-    """r14: _bucket_grid_scores chunks the corpus side at
-    _GRID_CHUNK_TARGET cells (ADVICE r13 medium — an uncapped hot bucket
-    used to materialize the whole Q x C grid in one task). Forcing
-    1-cell chunks must yield identical (bit-exact) scores, and rows with
-    NULL signatures must never pair (the equi-join semantics the
-    cogroup replaced)."""
-    rows_c = [
-        (1, [1.0, 0.0], 1.0, 5),
-        (2, [0.8, 0.6], 1.0, 5),
-        (3, [0.0, 1.0], 1.0, 5),
-        (4, [0.5, 0.5], 0.7071067811865476, None),
-        (9, [0.5, 0.5], 0.7071067811865476, None),
+@pytest.mark.parametrize("id_t", ["int", "string"])
+def test_grid_kernels_pin_degenerate_inputs(spark, id_t):
+    """NaN-element and zero-norm vectors and non-int64 id columns through
+    the three grid kernels. A zero-norm or NaN cosine compares as
+    greatest (Spark's NaN ordering), so it passes the threshold and the
+    MIN(id_a) verdict, and its score leaves the kernel as NULL. Empty
+    kernel outputs (the singleton bucket {5}, the singleton cluster {7})
+    keep the id column's type."""
+    cast = int if id_t == "int" else str
+    nan = float("nan")
+    vecs = [
+        (1, [1.0, 0.0, 0.0, 0.0]),
+        (2, [1.0, 0.0, 0.0, 0.0]),
+        (3, [0.0, 0.0, 0.0, 0.0]),
+        (4, [0.0, 0.0, 0.0, 0.0]),
+        (5, [1.0, nan, 0.0, 0.0]),
+        (6, [1.0, 0.01, 0.0, 0.0]),
+        (7, [0.0, 0.0, -1.0, 0.5]),
     ]
-    schema_c = (
-        "neighbor_id long, __cv array<double>, __cnorm double, __sig long"
+    corpus = spark.createDataFrame(
+        [(cast(i), v) for i, v in vecs], f"vec_id {id_t}, embedding array<float>"
     )
-    c = spark.createDataFrame(rows_c, schema_c)
-    q = spark.createDataFrame(
-        [
-            (r[0], r[1], r[2], r[3])
-            for r in rows_c
-        ],
-        "query_id long, __qv array<double>, __qnorm double, __sig long",
+    cen = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 0.0, -1.0, 0.0])],
+        "centroid_id long, embedding array<float>",
     )
+    near = 0.9999500037519226  # cos(1, 6) in float64
 
-    def run():
-        return sorted(
-            map(tuple, similarity._bucket_grid_scores(q, c).collect())
-        )
+    def expect(rows):  # ids in the first two columns
+        return sorted((cast(a), cast(b), *rest) for a, b, *rest in rows)
 
-    big = run()
-    monkeypatch.setattr(similarity, "_GRID_CHUNK_TARGET", 1)
-    tiny = run()
-    assert big == tiny
-    # bucket 5 has 3 vectors -> 6 ordered non-self pairs; the two
-    # null-sig rows contribute nothing (old equi-join semantics)
-    assert len(big) == 6
-    assert all(qid != 4 and qid != 9 for qid, _, _ in big)
+    pairs = similarity.lsh_near_dup_pairs(corpus, dim=4, n_planes=2, threshold=0.99)
+    assert pairs.dtypes[:2] == [("id_a", id_t), ("id_b", id_t)]
+    assert sorted(map(tuple, pairs.collect())) == expect(
+        [(1, 2, 1.0), (1, 6, near), (2, 6, near),
+         (3, 4, None), (3, 7, None), (4, 7, None)]
+    )
+    dd = similarity.semantic_dedup(corpus, cen, threshold=0.99)
+    assert dd.dtypes[0] == ("vec_id", id_t) and dd.dtypes[2] == ("dup_of", id_t)
+    assert sorted(
+        (r.vec_id, r.cluster_id, r.dup_of) for r in dd.collect()
+    ) == sorted(
+        (cast(i), c, None if d is None else cast(d))
+        for i, c, d in [(1, 0, None), (2, 0, 1), (3, 0, 1), (4, 0, 1),
+                        (5, 0, 1), (6, 0, 1), (7, 1, None)]
+    )
+    top = similarity.lsh_topk(corpus, corpus, k=2, dim=4, n_planes=2)
+    assert top.dtypes[:2] == [("query_id", id_t), ("neighbor_id", id_t)]
+    assert sorted(map(tuple, top.collect())) == expect(
+        [(1, 2, 1.0, 1), (1, 6, near, 2), (2, 1, 1.0, 1), (2, 6, near, 2),
+         (3, 1, None, 1), (3, 2, None, 2), (4, 1, None, 1), (4, 2, None, 2),
+         (5, 1, None, 1), (5, 2, None, 2), (6, 1, near, 1), (6, 2, near, 2),
+         (7, 1, 0.0, 1), (7, 2, 0.0, 2)]
+    )
 
 
 def test_auto_centroids_tracks_corpus_size():
@@ -1265,6 +1322,17 @@ def test_arrow_kernels_null_propagate_like_catalyst(spark):
     assert ref[1] == [[None], [None]]
     assert got[1] == ref[1]
     assert got[0] == ref[0] and got[2] == ref[2]
+
+    # a NULL vector gets a NULL cluster from the flat and hierarchical
+    # assign kernels, like the probe kernels; SemDeDup keeps that row
+    cen = e.where(F.col("vec_id") != 1).select(
+        F.col("vec_id").alias("centroid_id"), "embedding"
+    )
+    for hier in (False, True):
+        got = similarity.assign_centroids(e, cen, hierarchical=hier).collect()
+        assert sorted(map(tuple, got)) == [(0, 0), (1, None), (2, 2)]
+        dd = similarity.semantic_dedup(e, cen, hierarchical=hier).collect()
+        assert {r.vec_id: (r.dup_of, r.is_kept) for r in dd}[1] == (None, True)
 
 
 def test_knn_label_vote_ivf_probes_and_votes(spark):

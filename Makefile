@@ -6,8 +6,12 @@ SF_DIR ?= /root/testdata/sf0.01
 
 .PHONY: test oracle bench perfbench smoke
 
+# The ROADMAP tier-1 command, plus the 25 slowest tests for the wall-time
+# record.
 test:
-	$(PY) -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors \
+	  -p no:cacheprovider --durations=25
 
 # Full oracle sweep: every queries() entry vs its DuckDB twin at $(SF_DIR).
 # Appends the dated summary to ORACLE_SWEEPS.log (committed each round).

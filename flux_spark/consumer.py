@@ -5,9 +5,9 @@ assignment; poll -> fetch from current offset; READ_COMPLETION ends polling
 -> ``PollResult.should_continue``), and *implements* what the reference only
 stubbed: offset commit/fetch (offset.proto:8-66 has no Java impl,
 FluxConsumer.commitOffsets is empty at FluxConsumer.java:181-184). Committed
-offsets live in an append-only ``_offsets`` parquet log under the warehouse —
-latest-wins per (group, topic, partition) via a window on commit time, which
-keeps commits cheap blind appends at any scale.
+offsets live in an append-only ``_offsets`` parquet log under the warehouse,
+written and read on the driver with pyarrow — latest-wins per (group, topic,
+partition) on (commit time, seq), so commits are blind appends at any scale.
 
 A poll is one bounded batch scan: for each assigned (topic, partition) read
 ``[position, hwm)`` — filters prune to partition dirs + offset rowgroups, so
@@ -21,11 +21,12 @@ import itertools
 import os
 import threading
 import time
+import uuid
 from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -55,6 +56,13 @@ _OFFSETS_SCHEMA = StructType(
 class OffsetStore:
     """G10 — the ``_offsets`` table (group_id, topic, partition, offset).
 
+    A commit is a few rows, so all table I/O runs on the driver with
+    pyarrow and starts no Spark job. Format contract (``spark.read.parquet``
+    readers such as the lag monitors rely on it; older Spark-written files
+    meet it too): a flat directory of parquet files with ``_OFFSETS_SCHEMA``
+    columns, each published by renaming a dot-prefixed temp file (which
+    both readers skip) — atomic, no fsync, like the fast-lane segments.
+
     Latest-wins resolution orders by (commit_ts, seq): ``seq`` is a
     store-local monotonic counter that breaks ties when two commits land
     within one wall-clock tick (or under clock skew), so fetch() cannot
@@ -79,19 +87,56 @@ class OffsetStore:
             Path(self.path), self.store.warehouse / ".swap.lock"
         )
 
+    @staticmethod
+    def _write(directory: str | Path, rows: list[dict]) -> None:
+        """One ``part-commit-<uuid>.parquet`` file holding ``rows``,
+        published by an atomic rename from a dot-prefixed temp name."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        table = pa.Table.from_pylist(rows, schema=to_arrow_schema(_OFFSETS_SCHEMA))
+        name = f"part-commit-{uuid.uuid4().hex}.parquet"
+        os.makedirs(directory, exist_ok=True)
+        tmp = os.path.join(directory, f".{name}")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(directory, name))
+
+    def _read(self, filter=None) -> list[dict]:
+        """Every commit row (matching ``filter``, a pyarrow expression)."""
+        import pyarrow.dataset as ds
+
+        if not os.path.isdir(self.path):
+            return []
+        dataset = ds.dataset(
+            self.path, schema=to_arrow_schema(_OFFSETS_SCHEMA), format="parquet"
+        )
+        return dataset.to_table(filter=filter).to_pylist()
+
+    @staticmethod
+    def _latest(rows: list[dict]) -> list[dict]:
+        """The winning row per (group_id, topic, partition): greatest
+        (commit_ts, seq), a missing seq counting as -1."""
+        best = {}
+        for r in sorted(
+            rows, key=lambda r: (r["commit_ts"], -1 if r["seq"] is None else r["seq"])
+        ):
+            best[(r["group_id"], r["topic"], r["partition"])] = r
+        return list(best.values())
+
     def commit(
         self, group_id: str, offsets: dict[tuple[str, int], int], metadata: str | None = None
     ) -> None:
         from .catalog import file_lock
 
+        if not offsets:
+            return
         now = time.time()
         with self._seq_lock:
             seq = next(self._seq)
         rows = [
-            (group_id, t, int(p), int(off), now, seq, metadata)
+            dict(zip(_OFFSETS_SCHEMA.names, (group_id, t, int(p), int(off), now, seq, metadata)))
             for (t, p), off in offsets.items()
         ]
-        df = self.store.spark.createDataFrame(rows, _OFFSETS_SCHEMA)
         # flock shared with compact(): a commit can't append into the
         # directory while compact is atomically swapping it out. Crash
         # recovery runs INSIDE the lock: a committer that merely checked
@@ -100,7 +145,7 @@ class OffsetStore:
         # next recovery discard every older commit as a stale backup.
         with file_lock(self.store.warehouse / ".offsets.lock"):
             self._recover()
-            df.coalesce(1).write.mode("append").parquet(self.path)
+            self._write(self.path, rows)
 
     def compact(self) -> int:
         """Latest-wins rewrite of the ``_offsets`` log: keep only the
@@ -112,64 +157,31 @@ class OffsetStore:
         from a maintenance hook keeps ``fetch()`` an O(#groups) scan
         instead of an O(#commits-ever) one. Returns the number of rows
         kept (0 = nothing to compact)."""
-        import uuid
-
         from .catalog import atomic_dir_swap, file_lock
 
-        from pyspark.sql import Window
-
-        with self._seq_lock, file_lock(
-            self.store.warehouse / ".offsets.lock"
-        ):
+        with self._seq_lock, file_lock(self.store.warehouse / ".offsets.lock"):
             self._recover()
-            if not os.path.isdir(self.path):
-                return 0
-            df = self.store.spark.read.schema(_OFFSETS_SCHEMA).parquet(
-                self.path
-            )
-            w = Window.partitionBy("group_id", "topic", "partition").orderBy(
-                F.col("commit_ts").desc(),
-                F.coalesce(F.col("seq"), F.lit(-1)).desc(),
-            )
-            winners = (
-                df.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-            tmp = self.store.warehouse / f".offsets-compact-{uuid.uuid4().hex[:8]}"
-            winners.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-            kept = self.store.spark.read.parquet(str(tmp)).count()
-            atomic_dir_swap(
-                Path(self.path), tmp, self.store.warehouse / ".swap.lock"
-            )
-            return kept
+            winners = self._latest(self._read())
+            if winners:
+                tmp = self.store.warehouse / f".offsets-compact-{uuid.uuid4().hex[:8]}"
+                self._write(tmp, winners)
+                atomic_dir_swap(Path(self.path), tmp, self.store.warehouse / ".swap.lock")
+            return len(winners)
 
     def fetch(self, group_id: str) -> dict[tuple[str, int], int]:
         """Latest committed offset per (topic, partition) for the group.
 
-        Held under the offsets flock end-to-end (recover + scan +
-        collect): the read is metadata-sized, and without the lock a
-        concurrent compact/delete swap could delete part files between
-        listing and scan, failing the job mid-read."""
+        Held under the offsets flock end-to-end (recover + read): without
+        it a concurrent compact/delete swap could delete part files
+        between listing and read."""
+        import pyarrow.dataset as ds
+
         from .catalog import file_lock
 
         with file_lock(self.store.warehouse / ".offsets.lock"):
             self._recover()
-            if not os.path.isdir(self.path):
-                return {}
-            df = self.store.spark.read.schema(_OFFSETS_SCHEMA).parquet(self.path)
-            rows = (
-                df.where(F.col("group_id") == group_id)
-                .groupBy("topic", "partition")
-                .agg(
-                    F.max_by(
-                        "offset",
-                        F.struct(F.col("commit_ts"), F.coalesce(F.col("seq"), F.lit(-1))),
-                    ).alias("offset")
-                )
-                .collect()
-            )
-        return {(r["topic"], int(r["partition"])): int(r["offset"]) for r in rows}
+            rows = self._read(ds.field("group_id") == group_id)
+        return {(r["topic"], r["partition"]): r["offset"] for r in self._latest(rows)}
 
     # -- admin surface (Kafka AdminClient / kafka-consumer-groups parity) --
 
@@ -183,40 +195,27 @@ class OffsetStore:
 
         with file_lock(self.store.warehouse / ".offsets.lock"):
             self._recover()
-            if not os.path.isdir(self.path):
-                return []
-            df = self.store.spark.read.schema(_OFFSETS_SCHEMA).parquet(self.path)
-            return sorted(
-                r["group_id"]
-                for r in df.select("group_id").distinct().collect()
-            )
+            return sorted({r["group_id"] for r in self._read()})
 
     def delete_group(self, group_id: str) -> int:
         """Kafka AdminClient.deleteConsumerGroups analog: drop every
         committed offset for ``group_id``. Same atomic rewrite-and-swap
         as :meth:`compact` (under the warehouse flock + seq lock, so a
-        concurrent commit can't land in the directory being swapped out).
-        Returns the number of commit rows removed."""
-        import uuid
-
+        concurrent commit can't land in the directory being swapped out),
+        which also compacts the surviving groups' rows. Returns the number
+        of the group's commit rows removed."""
         from .catalog import atomic_dir_swap, file_lock
 
         with self._seq_lock, file_lock(self.store.warehouse / ".offsets.lock"):
             self._recover()
-            if not os.path.isdir(self.path):
-                return 0
-            df = self.store.spark.read.schema(_OFFSETS_SCHEMA).parquet(self.path)
-            total = df.count()
-            keep = df.where(F.col("group_id") != group_id)
-            kept = keep.count()
-            if kept == total:
+            rows = self._read()
+            keep = [r for r in rows if r["group_id"] != group_id]
+            if len(keep) == len(rows):
                 return 0
             tmp = self.store.warehouse / f".offsets-delg-{uuid.uuid4().hex[:8]}"
-            keep.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-            atomic_dir_swap(
-                Path(self.path), tmp, self.store.warehouse / ".swap.lock"
-            )
-            return int(total - kept)
+            self._write(tmp, self._latest(keep))
+            atomic_dir_swap(Path(self.path), tmp, self.store.warehouse / ".swap.lock")
+            return len(rows) - len(keep)
 
     def reset_offsets(
         self,
@@ -274,8 +273,7 @@ class OffsetStore:
             want = set(partitions)
             targets = {p: o for p, o in targets.items() if p in want}
         offsets = {(topic, int(p)): int(o) for p, o in targets.items()}
-        if offsets:
-            self.commit(group_id, offsets, metadata=label)
+        self.commit(group_id, offsets, metadata=label)
         return offsets
 
 
@@ -736,8 +734,7 @@ class FluxConsumer:
 
     def commit_offsets(self, metadata: str | None = None) -> None:
         self._ensure_live()
-        if self._positions:
-            self.offset_store.commit(self.group_id, self._positions, metadata)
+        self.offset_store.commit(self.group_id, self._positions, metadata)
 
     def committed(self) -> dict[tuple[str, int], int]:
         return self.offset_store.fetch(self.group_id)

@@ -104,6 +104,18 @@ def get_spark(
         # splits ~= cores at any file size. Cluster deployments keep
         # Spark's defaults: with real file sizes the floor never binds.
         b = b.config("spark.sql.files.openCostInBytes", str(64 * 1024))
+        # Above this many paths InMemoryFileIndex lists them with a Spark
+        # job of one task per path. Every micro-batch of the file stream
+        # source hands it each new segment file, so a drain over a topic of
+        # ~200 small segments paid a 200-task listing job (1-2 s) before
+        # its scan. Driver and executors share one disk in local mode, so
+        # parallel listing buys nothing: always list on the driver.
+        # Cluster deployments keep the default (32), where parallel
+        # listing pays off on object stores.
+        b = b.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1),
+        )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -37,6 +37,7 @@ the way max.poll.records does for Kafka consumers.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 from typing import Iterable
@@ -165,38 +166,44 @@ def drain_available_now(
     import time as _time
 
     name = f"drain_{uuid.uuid4().hex[:8]}"
+    # a checkpoint made here is removed once the query has stopped: the
+    # memory sink's table keeps its rows without it
+    own_checkpoint = checkpoint is None
+    if own_checkpoint:
+        checkpoint = tempfile.mkdtemp(prefix="flux-drain-ckpt-")
     writer = (
         stream_df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .option(
-            "checkpointLocation",
-            checkpoint or tempfile.mkdtemp(prefix="flux-drain-ckpt-"),
-        )
+        .option("checkpointLocation", checkpoint)
     )
     if trigger_interval_ms is not None:
         writer = writer.trigger(processingTime=f"{trigger_interval_ms} milliseconds")
     else:
         writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    # Plain AvailableNow queries terminate on their own. Stateful operators
-    # with processing-time timeouts do NOT: the engine keeps scheduling
-    # empty microbatches until the timeouts fire (hours away), so a drain
-    # would always burn the full timeout_s. Everything available is
-    # processed once two consecutive completed batches consumed zero rows
-    # (the second one is the no-data batch that emits watermark-closed
-    # results) — stop the query there.
-    deadline = _time.time() + timeout_s
-    while _time.time() < deadline:
-        if q.awaitTermination(1):
-            break
-        prog = q.recentProgress
-        if len(prog) >= 2 and all(p["numInputRows"] == 0 for p in prog[-2:]):
+    try:
+        q = writer.start()
+        # Plain AvailableNow queries terminate on their own. Stateful
+        # operators with processing-time timeouts do NOT: the engine keeps
+        # scheduling empty microbatches until the timeouts fire (hours
+        # away), so a drain would always burn the full timeout_s.
+        # Everything available is processed once two consecutive completed
+        # batches consumed zero rows (the second one is the no-data batch
+        # that emits watermark-closed results) — stop the query there.
+        deadline = _time.time() + timeout_s
+        while _time.time() < deadline:
+            if q.awaitTermination(1):
+                break
+            prog = q.recentProgress
+            if len(prog) >= 2 and all(p["numInputRows"] == 0 for p in prog[-2:]):
+                _stop_quiesced(q)
+                break
+        else:
+            # deadline hit with the query still running: never leak it
             _stop_quiesced(q)
-            break
-    else:
-        # deadline hit with the query still running: never leak it
-        _stop_quiesced(q)
+    finally:
+        if own_checkpoint:
+            shutil.rmtree(checkpoint, ignore_errors=True)
     return stream_df.sparkSession.table(name)
 
 

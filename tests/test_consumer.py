@@ -536,6 +536,58 @@ def test_offset_store_reset_offsets(topic_store):
     assert os_store.fetch("rg2") == only0
 
 
+def test_offsets_format_contract(spark, store):
+    """The _offsets directory stays one format for every reader: commit
+    files read back through spark.read with _OFFSETS_SCHEMA's types,
+    latest-wins resolves across pyarrow-written and legacy Spark-written
+    files, a torn temp file is invisible and an empty commit writes
+    nothing."""
+    import os
+    import time
+
+    from flux_spark.consumer import _OFFSETS_SCHEMA, OffsetStore
+
+    os_store = OffsetStore(store)
+    os_store.commit("fc", {("t", 0): 3, ("t", 1): 4}, metadata="m")
+    back = spark.read.parquet(os_store.path)
+    assert [(f.name, f.dataType) for f in back.schema] == [
+        (f.name, f.dataType) for f in _OFFSETS_SCHEMA
+    ]
+    assert sorted((r.partition, r.offset, r.metadata) for r in back.collect()) == [
+        (0, 3, "m"),
+        (1, 4, "m"),
+    ]
+
+    # a legacy Spark-written commit beside it: its (t, 0) row is newer
+    # and wins, its (t, 1) row is older and loses; it has no seq
+    now = time.time()
+    spark.createDataFrame(
+        [
+            ("fc", "t", 0, 90, now + 100.0, None, None),
+            ("fc", "t", 1, 1, now - 100.0, None, None),
+            ("legacy", "t", 2, 7, now, None, None),
+        ],
+        _OFFSETS_SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(os_store.path)
+    assert os_store.fetch("fc") == {("t", 0): 90, ("t", 1): 4}
+    assert os_store.groups() == ["fc", "legacy"]
+
+    # a torn temp write is invisible to fetch and to spark.read
+    with open(os.path.join(os_store.path, ".part-commit-torn.parquet"), "wb") as f:
+        f.write(b"PAR1 not a footer")
+    assert os_store.fetch("legacy") == {("t", 2): 7}
+    assert spark.read.parquet(os_store.path).count() == 5
+
+    files = sorted(os.listdir(os_store.path))
+    os_store.commit("fc", {})
+    assert sorted(os.listdir(os_store.path)) == files
+
+    assert os_store.compact() == 3
+    assert os_store.fetch("fc") == {("t", 0): 90, ("t", 1): 4}
+    assert os_store.fetch("legacy") == {("t", 2): 7}
+    assert spark.read.parquet(os_store.path).count() == 3
+
+
 def test_offsets_rewrite_crash_recovery(spark, store):
     """compact()/delete_group() dying between their two renames must not
     make committed offsets vanish: fetch(), groups() and commit() all

@@ -36,6 +36,46 @@ def test_drain_available_now_roundtrip(filled_store):
     assert stats == {0: (0, 19, 20), 1: (0, 19, 20), 2: (0, 19, 20)}
 
 
+def test_drain_removes_the_checkpoint_it_created(filled_store, tmp_path, monkeypatch):
+    """A drain without a caller checkpoint makes a temp one and removes it
+    once the query has stopped; the memory-sink table keeps every row."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = streaming.drain_available_now(streaming.stream_topic(filled_store, "src"))
+    assert list(tmp_path.glob("flux-drain-ckpt-*")) == []
+    assert out.count() == 60
+    assert out.select("value").distinct().count() == 60
+
+
+def test_drain_over_many_segments_starts_no_listing_job(store, spark, tmp_path):
+    """A drain over more segment files than Spark's parallel-listing
+    threshold (32) must list them on the driver: it runs exactly as many
+    Spark jobs as a drain over a handful of segments."""
+
+    def drain_jobs(topic: str, segments: int) -> int:
+        store.catalog.create_topic(topic, 1)
+        for i in range(segments):
+            store.append_rows(topic, [{"value": f"v{i}", "partition": 0}])
+        q = (
+            streaming.stream_topic(store, topic)
+            .writeStream.format("memory")
+            .queryName(f"listing_{topic}")
+            .option("checkpointLocation", str(tmp_path / f"ckpt-{topic}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        assert spark.table(f"listing_{topic}").count() == segments
+        # every micro-batch runs its jobs under job group = the run id
+        return len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+    few = drain_jobs("few", 4)
+    many = drain_jobs("many", 40)
+    assert few > 0
+    assert many == few
+
+
 def test_stream_partition_pruning(filled_store):
     src = streaming.stream_topic(filled_store, "src", partitions=[1])
     out = streaming.drain_available_now(src)

@@ -13,12 +13,14 @@ test:
 	timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors \
 	  -p no:cacheprovider --durations=25
 
-# Full oracle sweep: every queries() entry vs its DuckDB twin at $(SF_DIR).
-# Appends the dated summary to ORACLE_SWEEPS.log (committed each round).
+# Oracle sweep: every queries() entry vs its DuckDB twin at $(SF_DIR), or
+# only the entries named in ORACLES (make oracle ORACLES="q1 q2"). A full
+# sweep appends its dated summary to ORACLE_SWEEPS.log (committed each round).
 oracle:
-	$(PY) tests/oracle_check.py $(SF_DIR) 2>&1 | tail -n 160 | tee /tmp/oracle_sweep.out
-	@{ echo "== sweep $$(git rev-parse --short HEAD) $(SF_DIR) =="; \
-	   tail -n 3 /tmp/oracle_sweep.out; } >> ORACLE_SWEEPS.log
+	$(PY) tests/oracle_check.py $(SF_DIR) $(ORACLES) 2>&1 | tail -n 160 | tee /tmp/oracle_sweep.out
+	@if [ -z "$(ORACLES)" ]; then \
+	  { echo "== sweep $$(git rev-parse --short HEAD) $(SF_DIR) =="; \
+	    tail -n 3 /tmp/oracle_sweep.out; } >> ORACLE_SWEEPS.log; fi
 
 bench:
 	$(PY) bench.py

@@ -379,17 +379,20 @@ def main() -> None:
 
     lat_topic = "latency_probe"
     store.catalog.create_topic(lat_topic, 1)
-    # fast_path_max=0 pins the HONEST microbatch row: full Spark produce
-    # job + full Spark poll job per round trip (r9's published number)
-    lat_prod = FluxProducer(store, fast_path_max=0)
-    lat_cons = FluxConsumer(store, group_id="latbench")
+    # the HONEST microbatch row: full Spark produce job (a one-row
+    # DataFrame through ingest) + full Spark poll job (fast_path_max=0)
+    # per round trip
+    lat_prod = FluxProducer(store)
+    lat_cons = FluxConsumer(store, group_id="latbench", fast_path_max=0)
     lat_cons.assign({lat_topic: [0]})
     lat_n = max(1, int(os.environ.get("SPARK_GRAFT_LATENCY_N", "20")))
     lat_ms: list[float] = []
     for i in range(lat_n + 1):  # first round-trip warms, untimed
         t0 = time.perf_counter()
-        lat_prod.send(lat_topic, value=f"probe-{i}", key="k")
-        lat_prod.flush()
+        lat_prod.ingest(
+            lat_topic,
+            spark.createDataFrame([(f"probe-{i}", "k")], "value string, key string"),
+        )
         seen = lat_cons.poll().records.count()
         dt_ms = (time.perf_counter() - t0) * 1000.0
         assert seen == 1, (i, seen)
@@ -401,7 +404,7 @@ def main() -> None:
     # read (read_since), both oracle-gated equivalent to the Spark paths
     fast_topic = "latency_fast"
     store.catalog.create_topic(fast_topic, 1)
-    fast_prod = FluxProducer(store)  # default: small flushes take append_rows
+    fast_prod = FluxProducer(store)  # every flush takes append_rows
     fast_ms: list[float] = []
     nxt = 0
     for i in range(lat_n + 1):

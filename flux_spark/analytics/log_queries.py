@@ -153,8 +153,8 @@ def log_read_since_fastpath(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM src)
     SELECT part_id, record_offset, event_ts, rec_key, rec_value FROM routed
     """,
-    "driver-side pyarrow produce (LogStore.append_rows — the latency "
-    "fast path FluxProducer takes for small flushes) must land records "
+    "driver-side pyarrow produce (LogStore.append_rows — the lane every "
+    "FluxProducer flush takes) must land records "
     "at exactly the offsets the Spark append path would: same routing, "
     "same arrival order, same commit-then-visible files (r10, VERDICT "
     "r9 #5)",

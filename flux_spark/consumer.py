@@ -410,10 +410,11 @@ class FluxConsumer:
         self.rebalance_protocol = rebalance_protocol
         # polls that drain at most this many NEW records total are served
         # by the driver-side pyarrow tail read (LogStore.read_since) in
-        # milliseconds instead of the ~1 s Spark-job floor — the consumer-
-        # level twin of FluxProducer.fast_path_max (VERDICT r11 #3: the
-        # 4.6 ms lane existed only at the LogStore level, so a queue user
-        # wanting commit/rebalance semantics always paid the microbatch).
+        # milliseconds instead of the ~1 s Spark-job floor — the consumer
+        # side of LogStore.append_rows, which every FluxProducer flush
+        # takes (VERDICT r11 #3: the 4.6 ms lane existed only at the
+        # LogStore level, so a queue user wanting commit/rebalance
+        # semantics always paid the microbatch).
         # Positions, pause, commit and liveness bookkeeping are identical
         # on both lanes; 0 disables (always Spark). Tail polls of a live
         # queue are metadata-sized by definition — big backlogs (catch-up

@@ -191,6 +191,43 @@ class LogStore:
             yield
 
     # -- write path (S1-S6, §3.1) --------------------------------------
+    def _produce_batch(self, topic: str, batch_id: str | None, write):
+        """The batch-commit protocol both produce lanes share: under the
+        write lock, skip a replayed ``batch_id``, drop a crashed attempt's
+        files if its intent is left over, run ``write(meta)`` against the
+        hwm read under the lock, then advance the hwm (marking the batch)
+        and remove the intent. ``write`` routes, offsets and writes the
+        lane's files and returns ``{partition: (first, last)}``."""
+        self.catalog.get_topic(topic)  # raises InvalidTopicError
+        with self._write_lock(topic):
+            intent = None
+            if batch_id is not None:
+                commits = self.warehouse / topic / "_batch_commits"
+                # the legacy pre-r4 touch-file marker is still honored
+                if (
+                    self.catalog.batch_committed(topic, batch_id)
+                    or (commits / str(batch_id)).exists()
+                ):
+                    return {}
+                intent = commits / f"{batch_id}.intent"
+                if intent.exists():
+                    # prior attempt crashed between data write and commit:
+                    # its files sit entirely above the hwm — drop them so
+                    # this retry cannot double-write the same offsets
+                    self.discard_uncommitted(topic)
+                intent.parent.mkdir(parents=True, exist_ok=True)
+                intent.touch()
+            stats = write(self.catalog.get_topic(topic))  # hwm under the lock
+            # advanced even for an empty batch so its batch_id is marked
+            self.catalog.advance_hwm(
+                topic,
+                {p: last + 1 for p, (_, last) in stats.items()},
+                batch_id=batch_id,
+            )
+            if intent is not None:
+                intent.unlink(missing_ok=True)
+            return stats
+
     def append(
         self,
         topic: str,
@@ -224,39 +261,9 @@ class LogStore:
 
         Returns ``{partition: (first_offset, last_offset)}`` for the batch.
         """
-        meta = self.catalog.get_topic(topic)  # raises InvalidTopicError
-        n = meta.num_partitions
-        # legacy pre-r4 touch-file marker (still honored on old warehouses)
-        marker = (
-            self.warehouse / topic / "_batch_commits" / str(batch_id)
-            if batch_id is not None
-            else None
-        )
 
-        with self._write_lock(topic):
-            if batch_id is not None and (
-                self.catalog.batch_committed(topic, batch_id)
-                or marker.exists()
-            ):
-                return {}
-            intent = None
-            if batch_id is not None:
-                intent = (
-                    self.warehouse
-                    / topic
-                    / "_batch_commits"
-                    / f"{batch_id}.intent"
-                )
-                if intent.exists():
-                    # prior attempt crashed between data write and commit:
-                    # its files sit entirely above the hwm — drop them so
-                    # this retry cannot double-write the same offsets
-                    self.discard_uncommitted(topic)
-                intent.parent.mkdir(parents=True, exist_ok=True)
-                intent.touch()
-            # refresh hwm under the lock
-            meta = self.catalog.get_topic(topic)
-
+        def write(meta) -> dict[int, tuple[int, int]]:
+            n = meta.num_partitions
             work = df
             if "value" not in work.columns:
                 raise ValueError("record batch must have a 'value' column")
@@ -337,20 +344,13 @@ class LogStore:
                 .parquet(self.topic_path(topic))
             )
             vals = obs.get
-            stats = {
+            return {
                 p: (int(vals[f"min_{p}"]), int(vals[f"max_{p}"]))
                 for p in range(n)
                 if vals.get(f"min_{p}") is not None
             }
 
-            self.catalog.advance_hwm(
-                topic,
-                {p: last + 1 for p, (_, last) in stats.items()},
-                batch_id=batch_id,
-            )
-            if intent is not None:
-                intent.unlink(missing_ok=True)
-            return stats
+        return self._produce_batch(topic, batch_id, write)
 
     def append_rows(
         self,
@@ -358,13 +358,14 @@ class LogStore:
         rows: list[dict],
         batch_id: str | None = None,
     ) -> dict[int, tuple[int, int]]:
-        """Small-batch fast-path append — the produce-side twin of
-        :meth:`read_since`. A queue-like caller producing a handful of
-        records pays a full Spark job (~0.5 s floor) through
-        :meth:`append`; for driver-sized batches the batch IS the
-        bottleneck, so this path routes, offsets, and writes entirely on
-        the driver with pyarrow — one parquet file per touched partition,
-        no JVM round trip.
+        """Driver-side append of rows the caller already holds — the
+        produce-side twin of :meth:`read_since`. Shipping driver-held rows
+        through :meth:`append` adds a ``createDataFrame``, a shuffle and a
+        write job (~1 s floor) and takes no work off the driver, so this
+        path routes, offsets, and writes entirely on the driver with
+        pyarrow, no JVM round trip. Each touched partition's rows roll
+        into segments of at most ``max_records_per_file`` records, each
+        named by its own offset range.
 
         Semantics are IDENTICAL to :meth:`append` and oracle-gated against
         it (``log_fastpath_produce_parity``):
@@ -385,46 +386,22 @@ class LogStore:
         ``seq`` (optional) is the explicit arrival sequence used for
         round-robin placement (FluxProducer passes its global counter so
         placement matches the Spark path bit-for-bit). Headers are
-        ``[(key, value-bytes), ...]`` pairs.
+        ``[(key, value-bytes), ...]`` pairs. A naive ``timestamp`` is
+        local time, as pyspark reads it.
 
         At 100 TB this path is still correct but the wrong tool — it
         serializes through the driver. :meth:`append` remains the bulk
-        path; FluxProducer picks per flush based on batch size.
+        path for DataFrames; ``FluxProducer.flush`` always takes this one.
         """
+        from datetime import datetime, timezone
+
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         from .murmur2 import partition_for_key
 
-        meta = self.catalog.get_topic(topic)
-        n = meta.num_partitions
-        marker = (
-            self.warehouse / topic / "_batch_commits" / str(batch_id)
-            if batch_id is not None
-            else None
-        )
-        with self._write_lock(topic):
-            if batch_id is not None and (
-                self.catalog.batch_committed(topic, batch_id)
-                or marker.exists()
-            ):
-                return {}
-            intent = None
-            if batch_id is not None:
-                intent = (
-                    self.warehouse
-                    / topic
-                    / "_batch_commits"
-                    / f"{batch_id}.intent"
-                )
-                if intent.exists():
-                    self.discard_uncommitted(topic)
-                intent.parent.mkdir(parents=True, exist_ok=True)
-                intent.touch()
-            meta = self.catalog.get_topic(topic)  # refresh under the lock
-
-            from datetime import datetime, timezone
-
+        def write(meta) -> dict[int, tuple[int, int]]:
+            n = meta.num_partitions
             now = datetime.now(timezone.utc)
             routed: dict[int, list[tuple]] = {}
             for i, row in enumerate(rows):
@@ -439,7 +416,13 @@ class LogStore:
                     part = partition_for_key(key, n)
                 else:
                     part = int(row.get("seq", i)) % n
-                ts = row.get("timestamp") or now
+                ts = row.get("timestamp")
+                if hasattr(ts, "to_pydatetime"):
+                    # pandas refuses astimezone on a naive Timestamp
+                    ts = ts.to_pydatetime()
+                # naive -> local time, pyspark's rule, so collected Spark
+                # timestamps round-trip
+                ts = now if ts is None else ts.astimezone(timezone.utc)
                 headers = row.get("headers")
                 if headers is not None:
                     headers = [
@@ -472,36 +455,34 @@ class LogStore:
             stats: dict[int, tuple[int, int]] = {}
             for part, recs in routed.items():
                 first = meta.next_offset(part)
-                offsets = list(range(first, first + len(recs)))
-                table = pa.table(
-                    {
-                        "offset": offsets,
-                        "timestamp": [r[0] for r in recs],
-                        "key": [r[1] for r in recs],
-                        "value": [r[2] for r in recs],
-                        "headers": [r[3] for r in recs],
-                    },
-                    schema=arrow_schema,
-                )
+                # segment roll; <= 0 means no limit, as for maxRecordsPerFile
+                step = self.max_records_per_file
+                if step <= 0:
+                    step = len(recs)
                 pdir = Path(self.topic_path(topic)) / f"partition={part}"
                 pdir.mkdir(parents=True, exist_ok=True)
-                last = offsets[-1]
-                name = f"part-fast-{first:020d}-{last:020d}-{uuid.uuid4().hex}"
-                pq.write_table(
-                    table, pdir / f"{name}.parquet", compression=codec
-                )
-                stats[part] = (first, last)
-
-            # called even for an empty batch so a batch_id is marked
-            # committed exactly like the Spark path does
-            self.catalog.advance_hwm(
-                topic,
-                {p: last + 1 for p, (_, last) in stats.items()},
-                batch_id=batch_id,
-            )
-            if intent is not None:
-                intent.unlink(missing_ok=True)
+                for lo in range(0, len(recs), step):
+                    chunk = recs[lo : lo + step]
+                    start = first + lo
+                    last = start + len(chunk) - 1
+                    table = pa.table(
+                        {
+                            "offset": list(range(start, last + 1)),
+                            "timestamp": [r[0] for r in chunk],
+                            "key": [r[1] for r in chunk],
+                            "value": [r[2] for r in chunk],
+                            "headers": [r[3] for r in chunk],
+                        },
+                        schema=arrow_schema,
+                    )
+                    name = f"part-fast-{start:020d}-{last:020d}-{uuid.uuid4().hex}"
+                    pq.write_table(
+                        table, pdir / f"{name}.parquet", compression=codec
+                    )
+                stats[part] = (first, first + len(recs) - 1)
             return stats
+
+        return self._produce_batch(topic, batch_id, write)
 
     # -- read path (S8, S10, §3.2) -------------------------------------
     def read(

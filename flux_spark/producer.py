@@ -2,15 +2,18 @@
 
 FluxProducer (producer/FluxProducer.java) + RecordAccumulator
 (producer/RecordAccumulator.java) + RecordBatch/BufferPool collapse into a
-driver-side row buffer flushed as ONE Catalyst plan (SURVEY.md §3.1 rewrite):
-route -> shuffle by partition -> assign offsets -> parquet append. Per-batch
-semantics that Spark subsumes:
+driver-side row buffer. A flush hands each topic's buffered rows to
+:meth:`LogStore.append_rows` in one call, the way the reference hands a
+batch to the broker: route -> assign offsets -> parquet segments, all on the
+driver, where the rows already are (a Spark job would add a Python->JVM
+transfer, a shuffle and a job floor and take no work off it).
+Per-batch semantics that the log subsumes:
 
 * batching/linger (RecordAccumulator.java:278-318)   -> explicit/auto flush
-* retries + in-flight caps (FluxProducer.java:146-239) -> Spark task retries +
-  file-commit protocol (non-lossy, an upgrade over retry-drop)
+* retries + in-flight caps (FluxProducer.java:146-239) -> ``batch_id``
+  intent + commit protocol (non-lossy, an upgrade over retry-drop)
 * batch compression (RecordBatch.java:120-137)        -> parquet codec
-* buffer pool (BufferPool.java:64-160)                -> JVM/Spark memory mgmt
+* buffer pool (BufferPool.java:64-160)                -> Python row buffer
 
 ``send`` mirrors ProducerRecord defaulting (ProducerRecord.java:19-89):
 topic+value required, key/partition/timestamp optional. The producer keeps a
@@ -29,47 +32,16 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from .errors import InvalidTopicError
 from .log import LogStore
-from .schema import HEADER_TYPE
-
-_BUFFER_SCHEMA = StructType(
-    [
-        StructField("__arrival_seq", LongType(), False),
-        StructField("partition", IntegerType(), True),
-        StructField("timestamp", TimestampType(), True),
-        StructField("key", StringType(), True),
-        StructField("value", StringType(), False),
-        StructField("headers", HEADER_TYPE, True),
-    ]
-)
 
 
 class FluxProducer:
-    def __init__(
-        self,
-        store: LogStore,
-        batch_size: int = 100_000,
-        fast_path_max: int = 2_000,
-    ):
-        """``fast_path_max``: flushes of at most this many rows take the
-        driver-side pyarrow append (LogStore.append_rows — identical
-        semantics, oracle-gated, ~ms instead of a Spark-job floor);
-        larger flushes take the distributed plan. 0 disables the fast
-        path (bench.py uses that to time the honest microbatch leg)."""
+    def __init__(self, store: LogStore, batch_size: int = 100_000):
         self.store = store
         self.batch_size = batch_size
-        self.fast_path_max = fast_path_max
-        self._buffers: dict[str, list[tuple]] = {}
+        self._buffers: dict[str, list[dict]] = {}
         self._seq = itertools.count()
         self._lock = threading.Lock()
 
@@ -92,7 +64,14 @@ class FluxProducer:
             raise ValueError("value is required")
         with self._lock:
             self._buffers.setdefault(topic, []).append(
-                (next(self._seq), partition, timestamp, key, str(value), headers)
+                {
+                    "seq": next(self._seq),
+                    "partition": partition,
+                    "timestamp": timestamp,
+                    "key": key,
+                    "value": str(value),
+                    "headers": headers,
+                }
             )
             full = len(self._buffers[topic]) >= self.batch_size
         if full:
@@ -104,29 +83,9 @@ class FluxProducer:
         with self._lock:
             topics = [topic] if topic else list(self._buffers)
             drained = {t: self._buffers.pop(t, []) for t in topics}
-        results: dict[str, dict[int, tuple[int, int]]] = {}
-        for t, rows in drained.items():
-            if not rows:
-                continue
-            if len(rows) <= self.fast_path_max:
-                results[t] = self.store.append_rows(
-                    t,
-                    [
-                        {
-                            "seq": seq,
-                            "partition": part,
-                            "timestamp": ts,
-                            "key": key,
-                            "value": val,
-                            "headers": headers,
-                        }
-                        for seq, part, ts, key, val, headers in rows
-                    ],
-                )
-                continue
-            df = self.store.spark.createDataFrame(rows, _BUFFER_SCHEMA)
-            results[t] = self.store.append(t, df, ordering_col="__arrival_seq")
-        return results
+        return {
+            t: self.store.append_rows(t, rows) for t, rows in drained.items() if rows
+        }
 
     # -- bulk API (the Spark-native path) ---------------------------------
     def ingest(

@@ -343,17 +343,31 @@ def test_append_with_batch_id_is_idempotent(spark, store):
         assert lo == first[p][1] + 1
 
 
-def test_torn_append_retry_is_exactly_once(spark, store, monkeypatch):
+@pytest.mark.parametrize("lane", ["append", "append_rows"])
+def test_torn_append_retry_is_exactly_once(spark, store, monkeypatch, lane):
     """Driver crash BETWEEN parquet write and hwm advance, then a
     same-batch_id retry: the intent protocol must discard the torn
     attempt's files before re-appending, so rows land exactly once at
     gap-free offsets (ADVICE r3: the old post-write marker left this
-    window duplicate-visible)."""
+    window duplicate-visible). Run on both produce lanes; on
+    ``append_rows`` each partition's 20 rows roll into three segments."""
     store.catalog.create_topic("torn", 2)
-    df = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(40)], "seq long, value string"
-    )
-    store.append("torn", df, ordering_col="seq", batch_id="t-0")
+    if lane == "append":
+        df = spark.createDataFrame(
+            [(i, f"v{i}") for i in range(40)], "seq long, value string"
+        )
+
+        def produce(batch_id):
+            return store.append("torn", df, ordering_col="seq", batch_id=batch_id)
+
+    else:
+        store.max_records_per_file = 8
+        recs = [{"seq": i, "value": f"v{i}"} for i in range(40)]
+
+        def produce(batch_id):
+            return store.append_rows("torn", recs, batch_id=batch_id)
+
+    produce("t-0")
 
     # crash analog: parquet files commit, advance_hwm never runs
     real_advance = store.catalog.advance_hwm
@@ -363,7 +377,7 @@ def test_torn_append_retry_is_exactly_once(spark, store, monkeypatch):
 
     monkeypatch.setattr(store.catalog, "advance_hwm", boom)
     with pytest.raises(RuntimeError, match="simulated driver crash"):
-        store.append("torn", df, ordering_col="seq", batch_id="t-1")
+        produce("t-1")
     monkeypatch.setattr(store.catalog, "advance_hwm", real_advance)
 
     # torn files exist above the hwm but are invisible to committed reads
@@ -371,9 +385,13 @@ def test_torn_append_retry_is_exactly_once(spark, store, monkeypatch):
     assert store.read("torn", include_uncommitted=True).count() == 80
     intent = store.warehouse / "torn" / "_batch_commits" / "t-1.intent"
     assert intent.exists()
+    if lane == "append_rows":
+        for p in range(2):
+            pdir = store.warehouse / "torn" / f"partition={p}"
+            assert len(list(pdir.glob("part-fast-*.parquet"))) == 6
 
     # retry: discards the torn attempt, appends exactly once
-    stats = store.append("torn", df, ordering_col="seq", batch_id="t-1")
+    stats = produce("t-1")
     assert sum(hi - lo + 1 for lo, hi in stats.values()) == 40
     assert not intent.exists()
     assert store.read("torn").count() == 80
@@ -385,7 +403,7 @@ def test_torn_append_retry_is_exactly_once(spark, store, monkeypatch):
     for p, offs in by_part.items():
         assert sorted(offs) == list(range(len(offs))), f"partition {p} gap"
     # replay of the now-committed batch is still a no-op
-    assert store.append("torn", df, ordering_col="seq", batch_id="t-1") == {}
+    assert produce("t-1") == {}
     assert store.read("torn").count() == 80
 
 
@@ -1329,7 +1347,7 @@ def test_producer_small_flush_takes_fastpath_and_headers_roundtrip(
     from flux_spark.producer import FluxProducer
 
     store.catalog.create_topic("fastprod", 2)
-    prod = FluxProducer(store)  # default fast_path_max covers 3 records
+    prod = FluxProducer(store)  # every flush takes append_rows
     prod.send(
         "fastprod",
         value="v0",
@@ -1353,3 +1371,60 @@ def test_producer_small_flush_takes_fastpath_and_headers_roundtrip(
     for r in got:
         if r["key"]:
             assert r["partition"] == partition_for_key(r["key"], 2)
+
+
+def test_append_rows_rolls_segments_at_max_records_per_file(store):
+    """A flush rolls each partition's rows into offset-named segments of
+    at most ``max_records_per_file`` records, the split the Spark writer
+    makes with ``maxRecordsPerFile``; read_since skips the ones below its
+    start by name and returns what the Spark read does."""
+    from flux_spark.log import _FAST_SEGMENT
+    from flux_spark.producer import FluxProducer
+
+    store.max_records_per_file = 10
+    store.catalog.create_topic("roll", 1)
+    prod = FluxProducer(store)
+    for i in range(25):
+        prod.send("roll", value=f"v{i}", key=f"k{i}")
+    assert prod.flush() == {"roll": {0: (0, 24)}}
+    pdir = store.warehouse / "roll" / "partition=0"
+    names = [f.name for f in pdir.glob("*.parquet")]
+    assert sorted(
+        tuple(int(x) for x in _FAST_SEGMENT.fullmatch(n).groups()) for n in names
+    ) == [(0, 9), (10, 19), (20, 24)]
+    want = [
+        (r["offset"], r["key"], r["value"])
+        for r in store.read("roll").orderBy("offset").collect()
+        if r["offset"] >= 12
+    ]
+    got = [(r["offset"], r["key"], r["value"]) for r in store.read_since("roll", 0, 12)]
+    assert got == want and len(got) == 13
+
+
+def test_naive_timestamp_is_local_time_on_every_flush(store, monkeypatch):
+    """A naive ``timestamp`` is process-local time, pyspark's rule for
+    ``createDataFrame`` — so the instant stored does not depend on which
+    lane wrote it, and Spark-collected timestamps round-trip. A naive
+    pandas Timestamp (``toPandas`` output) follows the same rule."""
+    import time
+    from datetime import datetime, timezone
+
+    import pandas as pd
+
+    from flux_spark.producer import FluxProducer
+
+    store.catalog.create_topic("tz", 1)
+    prod = FluxProducer(store)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        ts = datetime(2024, 1, 1, 12)
+        prod.send("tz", value="v", timestamp=ts)
+        prod.send("tz", value="pd", timestamp=pd.Timestamp(ts))
+        prod.flush()
+        got = [r["timestamp"] for r in store.read_since("tz", 0, 0)]
+        assert got == [ts.astimezone(timezone.utc)] * 2
+        assert got[0] == datetime(2024, 1, 1, 17, tzinfo=timezone.utc)
+    finally:
+        monkeypatch.undo()
+        time.tzset()

@@ -380,11 +380,9 @@ def main() -> None:
     lat_topic = "latency_probe"
     store.catalog.create_topic(lat_topic, 1)
     # the HONEST microbatch row: full Spark produce job (a one-row
-    # DataFrame through ingest) + full Spark poll job (fast_path_max=0)
-    # per round trip
+    # DataFrame through ingest) + the Spark scan a Spark-lane poll runs
+    # (read from the previous round trip's high-water mark) per round trip
     lat_prod = FluxProducer(store)
-    lat_cons = FluxConsumer(store, group_id="latbench", fast_path_max=0)
-    lat_cons.assign({lat_topic: [0]})
     lat_n = max(1, int(os.environ.get("SPARK_GRAFT_LATENCY_N", "20")))
     lat_ms: list[float] = []
     for i in range(lat_n + 1):  # first round-trip warms, untimed
@@ -393,7 +391,7 @@ def main() -> None:
             lat_topic,
             spark.createDataFrame([(f"probe-{i}", "k")], "value string, key string"),
         )
-        seen = lat_cons.poll().records.count()
+        seen = store.read(lat_topic, partitions=[0], start_offsets={0: i}).count()
         dt_ms = (time.perf_counter() - t0) * 1000.0
         assert seen == 1, (i, seen)
         if i > 0:
@@ -423,7 +421,7 @@ def main() -> None:
     # (positions/commit/group semantics included), so a queue user no
     # longer drops to the LogStore to reach the ms class. The round trip
     # is fast produce -> poll -> .rows (plain Python; the DataFrame is
-    # lazy and untouched here).
+    # lazy and untouched here), on the driver lane.
     cons_topic = "latency_consumer"
     store.catalog.create_topic(cons_topic, 1)
     cons_prod = FluxProducer(store)
@@ -436,7 +434,7 @@ def main() -> None:
         cons_prod.flush()
         res = cons_cons.poll()
         dt_ms = (time.perf_counter() - t0) * 1000.0
-        assert res.count == 1 and res.rows is not None, (i, res.count)
+        assert res.count == 1 and res.lane == "driver", (i, res.count, res.lane)
         assert res.rows[0]["value"] == f"probe-{i}"
         if i > 0:
             cons_ms.append(dt_ms)

@@ -265,13 +265,13 @@ def log_latest_reset_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE r.record_offset >= hw.n - 300
     """,
     "consumer-API fast poll (r12, VERDICT r11 #3): a tail drain within "
-    "fast_path_max is served by the driver-side pyarrow read_since lane "
-    "through FluxConsumer.poll itself — same positions/pause/commit "
-    "bookkeeping as the Spark lane, ms-class instead of the ~1 s "
-    "microbatch floor. The gate seeks every partition 300 records "
-    "before its hwm, polls, ASSERTS the fast lane actually served it "
-    "(rows is not None), and the oracle replays [hwm-300, hwm) per "
-    "partition in SQL — row-exact including timestamps and keys",
+    "the consumer's driver-poll bound is served by the driver-side "
+    "pyarrow read_since lane through FluxConsumer.poll itself — same "
+    "positions/pause/commit bookkeeping as the Spark lane, ms-class "
+    "instead of the ~1 s microbatch floor. The gate seeks every partition "
+    "300 records before its hwm, polls, ASSERTS the driver lane actually "
+    "served it (lane == 'driver'), and the oracle replays [hwm-300, hwm) "
+    "per partition in SQL — row-exact including timestamps and keys",
 )
 def log_consumer_fast_poll_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..consumer import FluxConsumer
@@ -283,10 +283,10 @@ def log_consumer_fast_poll_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     for p in (0, 1, 2):
         cons.seek("events", p, max(0, hwm.get(p, 0) - 300))
     res = cons.poll()
-    if res.rows is None:
+    if res.lane != "driver":
         raise AssertionError(
-            f"expected the pyarrow fast-poll lane for a {res.count}-record "
-            f"tail drain (fast_path_max={cons.fast_path_max})"
+            f"expected the driver lane for a {res.count}-record tail "
+            f"drain, got {res.lane!r}"
         )
     return res.records.select(
         F.col("partition").alias("part_id"),

@@ -76,10 +76,19 @@ def input_bytes(sf_dir: str, name: str) -> int:
     the deterministic scale signal behind size-gated materialization
     decisions (guide §2: derive scale knobs from input size, never from
     a constant tuned for one deployment). Re-reads the filesystem every
-    call; no cross-run state."""
+    call; no cross-run state. A ``scheme://`` path is sized through the
+    active session's Hadoop FileSystem, and raises if it cannot be."""
     import os
 
     path = f"{sf_dir}/{name}.parquet"
+    if "://" in path:
+        try:
+            spark = SparkSession.getActiveSession()
+            hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+            fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+            return int(fs.getContentSummary(hpath).getLength())
+        except Exception as e:
+            raise RuntimeError(f"input_bytes: cannot size {path}") from e
     if os.path.isdir(path):
         total = 0
         for root, _dirs, files in os.walk(path):

@@ -9,10 +9,11 @@ offsets live in an append-only ``_offsets`` parquet log under the warehouse,
 written and read on the driver with pyarrow — latest-wins per (group, topic,
 partition) on (commit time, seq), so commits are blind appends at any scale.
 
-A poll is one bounded batch scan: for each assigned (topic, partition) read
-``[position, hwm)`` — filters prune to partition dirs + offset rowgroups, so
-poll cost tracks the amount of *new* data, not log size (the reference's
-index-seek property, README.md:198).
+A poll reads ``[position, hwm)`` of each assigned (topic, partition), on
+the driver for a few thousand records or as one Spark scan above that;
+both prune to partition dirs + offset ranges, so poll cost tracks the
+amount of *new* data, not log size (the reference's index-seek property,
+README.md:198).
 """
 
 from __future__ import annotations
@@ -39,6 +40,7 @@ from pyspark.sql.types import (
 from .coordinator import GroupCoordinator
 from .errors import RebalanceInProgressError, UnknownMemberError
 from .log import LogStore
+from .schema import RECORD_SCHEMA
 
 _OFFSETS_SCHEMA = StructType(
     [
@@ -277,76 +279,82 @@ class OffsetStore:
         return offsets
 
 
-class PollResult:
-    """consumer/PollResult.java:5 — records + end-of-log signal.
+# Polls of at most this many new records are read on the driver; bigger
+# ones run one Spark scan, the only lane that reads a backlog larger than
+# the driver can hold. Poll latency in ms, accessor included (``.records``
+# = a noop write): 4 vCPUs, ``local[2]``, keyed 3-partition topic written
+# in 2,500-record flushes, lanes interleaved, median of 5 runs (a second
+# set of 7 at 2.5k / 5k / 10k gave the same order):
+#
+#   records | .rows driver | .rows Spark | .records driver | .records Spark
+#     2,500 |           52 |         341 |             143 |            258
+#     5,000 |           90 |         339 |             185 |            218
+#    10,000 |          211 |         529 |             345 |            311
+#    25,000 |          520 |         838 |             695 |            318
+#   250,000 |        4,714 |       5,287 |           6,010 |            667
+#
+# The bound is the largest size where the driver lane wins on both.
+_DRIVER_POLL_MAX_RECORDS = 5_000
+_RECORD_ARROW_SCHEMA = to_arrow_schema(RECORD_SCHEMA)
 
-    Small polls (<= the consumer's ``fast_path_max``) are served by the
-    driver-side pyarrow tail read (``LogStore.read_since``) in
-    milliseconds; such results carry the records as plain-Python
-    ``rows`` and materialize the ``records`` DataFrame LAZILY on first
-    access (a local-relation ``createDataFrame`` — correct but it pays a
-    JVM round trip, so the ms-class lane never touches it unless asked).
-    Spark-lane results have ``rows is None`` and ``records`` set
-    eagerly. ``count``/``should_continue`` are identical on both lanes,
-    and the row-level equivalence is oracle-gated
+
+class PollResult:
+    """consumer/PollResult.java:5 — records + end-of-log signal, one
+    shape whichever lane served the poll: ``rows`` (dicts, the shape
+    ``LogStore.read_since`` returns), ``records`` (a RECORD_SCHEMA
+    DataFrame), ``count``, ``should_continue`` (``count > 0``) and
+    ``lane`` (``"driver"`` or ``"spark"``). The accessor the lane does not
+    hold is built lazily: ``records`` from one Arrow table of the rows,
+    ``rows`` through ``records.toArrow()``. Lane parity is oracle-gated
     (``log_consumer_fast_poll_parity``)."""
 
     def __init__(
         self,
-        records: DataFrame | None = None,
-        count: int = 0,
-        should_continue: bool = False,
+        lane: str,
+        count: int,
         rows: "list[dict] | None" = None,
+        records: DataFrame | None = None,
         spark=None,
     ):
+        self.lane = lane
+        self.count = count
+        self.should_continue = count > 0
+        self._dicts = rows
         self._df = records
         self._spark = spark
-        self.rows = rows
-        self.count = count
-        self.should_continue = should_continue
+
+    @property
+    def rows(self) -> list[dict]:
+        if self._dicts is None:
+            self._dicts = self._df.toArrow().to_pylist()
+        return self._dicts
 
     @property
     def records(self) -> DataFrame:
         if self._df is None:
-            from .schema import RECORD_SCHEMA
+            import pyarrow as pa
 
             self._df = self._spark.createDataFrame(
-                [
-                    (
-                        r["topic"],
-                        r["partition"],
-                        r["offset"],
-                        r["timestamp"],
-                        r["key"],
-                        r["value"],
-                        r["headers"],
-                    )
-                    for r in (self.rows or [])
-                ],
-                RECORD_SCHEMA,
+                pa.Table.from_pylist(self._dicts, schema=_RECORD_ARROW_SCHEMA)
             )
         return self._df
 
-    def __repr__(self) -> str:  # dataclass-parity: this was a @dataclass
-        # until the lazy ``records`` property replaced the generated
-        # __repr__/__eq__; keep print/compare behavior stable.
+    def __repr__(self) -> str:
         return (
-            f"PollResult(count={self.count}, "
-            f"should_continue={self.should_continue}, "
-            f"rows={'<spark-lane>' if self.rows is None else len(self.rows)})"
+            f"PollResult(lane={self.lane!r}, count={self.count}, "
+            f"should_continue={self.should_continue})"
         )
 
-    def __eq__(self, other) -> bool:
+    def __eq__(self, other) -> bool:  # never starts a Spark job
         if not isinstance(other, PollResult):
             return NotImplemented
-        return (
-            self.count == other.count
-            and self.should_continue == other.should_continue
-            and self.rows == other.rows
-            and (self.rows is not None or self._df is other._df)
+        return (self.lane, self.count) == (other.lane, other.count) and (
+            self._dicts == other._dicts
+            if self.lane == "driver"
+            else self._df is other._df
         )
 
-    __hash__ = None  # mutable value object, like the old eq=True dataclass
+    __hash__ = None  # mutable value object
 
 
 @dataclass
@@ -374,7 +382,6 @@ class FluxConsumer:
         auto_offset_reset: str = "earliest",
         session_timeout_s: float | None = None,
         rebalance_protocol: str = "eager",
-        fast_path_max: int = 2_000,
     ):
         if auto_offset_reset not in ("earliest", "latest"):
             raise ValueError(
@@ -408,18 +415,6 @@ class FluxConsumer:
         # consistent view. Pair with protocols=("sticky",) — cooperative
         # resync only pays off when the assignor minimizes movement.
         self.rebalance_protocol = rebalance_protocol
-        # polls that drain at most this many NEW records total are served
-        # by the driver-side pyarrow tail read (LogStore.read_since) in
-        # milliseconds instead of the ~1 s Spark-job floor — the consumer
-        # side of LogStore.append_rows, which every FluxProducer flush
-        # takes (VERDICT r11 #3: the 4.6 ms lane existed only at the
-        # LogStore level, so a queue user wanting commit/rebalance
-        # semantics always paid the microbatch).
-        # Positions, pause, commit and liveness bookkeeping are identical
-        # on both lanes; 0 disables (always Spark). Tail polls of a live
-        # queue are metadata-sized by definition — big backlogs (catch-up
-        # reads) exceed the bound and take the distributed scan.
-        self.fast_path_max = fast_path_max
         self.last_rebalance: RebalanceEvent | None = None
         self.offset_store = OffsetStore(store)
         # generation this member last synced on; None until subscribe()
@@ -594,20 +589,15 @@ class FluxConsumer:
         """Fetch all records in ``[position, hwm)`` for every assigned
         partition; advance positions; signal end-of-log when nothing new.
 
-        Lane selection happens AFTER the read plan is computed from
-        catalog metadata (no Spark job either way): when the total new
-        record count is within ``fast_path_max``, each (topic,
-        partition, range) is served by the name- then footer-pruned
-        pyarrow tail read (``LogStore.read_since`` — ms-class, visibility
-        contract identical to ``read()``), and the result carries
-        plain-Python ``rows`` with the DataFrame built lazily. Bigger
-        drains take the distributed scan exactly as before. The read plan,
-        pause filtering and liveness are shared code above the branch, so
-        commit/rebalance semantics cannot diverge between lanes. The
-        Spark lane advances positions at plan time; the fast lane only
-        once its read delivered every planned record, so a fast poll that
-        raises leaves positions where they were and a plain re-poll is
-        safe."""
+        The read plan (positions, pause, pagination) comes from catalog
+        metadata and is shared by both lanes. At most
+        ``_DRIVER_POLL_MAX_RECORDS`` new records (an empty poll included)
+        are read on the driver, one ``LogStore.read_since`` per partition
+        with ``read()``'s visibility contract; more run one Spark scan.
+        The Spark lane advances positions at plan time; the driver lane
+        only once its read delivered every planned record, so a driver
+        poll that raises leaves positions where they were and a plain
+        re-poll is safe."""
         self._ensure_live()
         plan: list[tuple[str, dict[int, int], dict[int, int]]] = []
         new_positions = dict(self._positions)
@@ -630,7 +620,7 @@ class FluxConsumer:
                     total_new += end - pos
             if starts:
                 plan.append((t, starts, ends))
-        if 0 < total_new <= self.fast_path_max:
+        if total_new <= _DRIVER_POLL_MAX_RECORDS:
             rows: list[dict] = []
             for t, starts, ends in plan:
                 for p in sorted(starts):
@@ -643,7 +633,7 @@ class FluxConsumer:
                 # An under-delivering read (pruning bug, a file removed
                 # by a compaction swap between planning and read) must
                 # not skip records silently. The Spark lane surfaces
-                # such failures at action time — make the fast lane
+                # such failures at action time — make the driver lane
                 # equally loud, before positions move.
                 raise RuntimeError(
                     f"fast poll under-delivered: planned {total_new} "
@@ -651,34 +641,18 @@ class FluxConsumer:
                     "— re-poll"
                 )
             self._positions = new_positions
-            return PollResult(
-                rows=rows,
-                spark=self.store.spark,
-                count=total_new,
-                should_continue=True,
-            )
+            return PollResult("driver", total_new, rows=rows, spark=self.store.spark)
         self._positions = new_positions
-        frames: list[DataFrame] = []
-        for t, starts, ends in plan:
-            frames.append(
-                self.store.read(
-                    t,
-                    partitions=sorted(starts),
-                    start_offsets=starts,
-                    end_offsets=ends,
-                )
+        frames = [
+            self.store.read(
+                t, partitions=sorted(starts), start_offsets=starts, end_offsets=ends
             )
-        if frames:
-            df = frames[0]
-            for f in frames[1:]:
-                df = df.unionByName(f)
-        else:
-            from .schema import RECORD_SCHEMA
-
-            df = self.store.spark.createDataFrame([], RECORD_SCHEMA)
-        return PollResult(
-            records=df, count=total_new, should_continue=total_new > 0
-        )
+            for t, starts, ends in plan
+        ]
+        df = frames[0]
+        for f in frames[1:]:
+            df = df.unionByName(f)
+        return PollResult("spark", total_new, records=df)
 
     # -- seek / position / commit ---------------------------------------
     def seek(self, topic: str, partition: int, offset: int) -> None:

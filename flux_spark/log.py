@@ -617,8 +617,11 @@ class LogStore:
         Returns ``list[dict]`` in ascending offset order with the
         RECORD_SCHEMA fields (topic, partition, offset, timestamp, key,
         value, headers) — plain Python, no DataFrame, because the point of
-        the fast path is to never touch the JVM.
+        the fast path is to never touch the JVM. Timestamps are UTC-aware
+        ``datetime`` values whichever lane wrote the segment.
         """
+        from datetime import timezone
+
         import pyarrow.parquet as pq
 
         meta = self.catalog.get_topic(topic)
@@ -666,10 +669,12 @@ class LogStore:
                             rec["partition"] = int(partition)
                             ts = rec.get("timestamp")
                             if hasattr(ts, "to_pydatetime"):
-                                # ns-resolution arrow timestamps surface as
-                                # pandas Timestamps; the contract is plain
-                                # Python
-                                rec["timestamp"] = ts.to_pydatetime()
+                                # ns arrow timestamps surface as pandas ones
+                                ts = ts.to_pydatetime()
+                            if ts is not None and ts.tzinfo is None:
+                                # Spark-written INT96: a zone-less UTC instant
+                                ts = ts.replace(tzinfo=timezone.utc)
+                            rec["timestamp"] = ts
                             recs.append(rec)
         recs.sort(key=lambda r: r["offset"])
         if max_records is not None:

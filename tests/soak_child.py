@@ -10,11 +10,14 @@ Roles:
 * ``producer <id> <n_batches> <rows>`` — appends batches whose values
   encode (producer, batch, row); writes ``producer-<id>.done`` when
   finished.
-* ``consumer <group> <n_producers>`` — polls + commits in a loop until
-  every producer's done-sentinel exists AND two consecutive polls return
-  nothing; writes the (partition, offset, value) triples it saw to
+* ``consumer <group> <n_producers> [spark]`` — polls + commits in a loop
+  until every producer's done-sentinel exists AND two consecutive polls
+  return nothing; writes the (partition, offset, value) triples it saw,
+  and how many non-empty polls each lane served, to
   ``consumer-<group>.out``. Poll retries tolerate the documented
   transient missing-file read during a concurrent compaction swap.
+  ``spark`` sets the driver-poll bound to 0, so every non-empty poll
+  takes the Spark lane.
 * ``maintenance <n_producers>`` — runs ``LogStore.maintenance`` with an
   aggressive compaction threshold every ~0.5 s until the producers are
   done (then once more); writes pass count + how many ran mid-traffic to
@@ -71,23 +74,23 @@ def run_consumer(
     ctrl: str,
     group: str,
     n_producers: int,
-    fast: bool = False,
+    spark_lane: bool = False,
 ):
+    from flux_spark import consumer as consumer_mod
     from flux_spark.consumer import FluxConsumer
     from flux_spark.log import LogStore
 
     spark = _spark(f"soak-cons-{group}")
     store = LogStore(spark, warehouse)
-    # fast=True (r13, VERDICT r12 #7): raise fast_path_max so every drain
-    # this soak produces is served by the driver-side pyarrow lane
-    # (poll() -> read_since). read_since skips a file a compaction swap
-    # just removed, poll() raises when the read comes up short, and the
-    # loop below re-polls, which is safe because a raising fast poll
-    # leaves positions unchanged. The soak holds this to the same
-    # exactly-once bar as the Spark lane, under commit load.
-    cons = FluxConsumer(
-        store, group, fast_path_max=1_000_000 if fast else 2_000
-    )
+    # Under the default bound every drain this soak produces is read on
+    # the driver (poll() -> read_since): read_since skips a file a
+    # compaction swap just removed, poll() raises when the read comes up
+    # short, and the loop below re-polls, which is safe because a raising
+    # driver poll leaves positions unchanged. spark_lane=True sets the
+    # bound to 0, so every non-empty poll runs the Spark scan instead.
+    if spark_lane:
+        consumer_mod._DRIVER_POLL_MAX_RECORDS = 0
+    cons = FluxConsumer(store, group)
     cons.subscribe(["soak"])
     seen: list[tuple[int, int, str]] = []
     fast_polls = spark_polls = 0
@@ -102,20 +105,20 @@ def run_consumer(
             time.sleep(0.2)
             continue
         if res.count:
-            if res.rows is not None:
+            try:
+                rows = res.rows
+            except Exception:
+                # the Spark lane's scan is lazy: a file a compaction swap
+                # removed after planning fails here, and positions have
+                # already moved, so rewind to the last commit and re-poll
+                cons.subscribe(["soak"])
+                time.sleep(0.2)
+                continue
+            if res.lane == "driver":
                 fast_polls += 1
-                seen.extend(
-                    (r["partition"], r["offset"], r["value"])
-                    for r in res.rows
-                )
             else:
                 spark_polls += 1
-                seen.extend(
-                    (r["partition"], r["offset"], r["value"])
-                    for r in res.records.select(
-                        "partition", "offset", "value"
-                    ).collect()
-                )
+            seen.extend((r["partition"], r["offset"], r["value"]) for r in rows)
             cons.commit_offsets()
             empty_after_done = 0
         elif _producers_done(ctrl, n_producers):
@@ -165,7 +168,7 @@ def main() -> None:
             ctrl,
             sys.argv[4],
             int(sys.argv[5]),
-            fast=len(sys.argv) > 6 and sys.argv[6] == "fast",
+            spark_lane=len(sys.argv) > 6 and sys.argv[6] == "spark",
         )
     elif role == "maintenance":
         run_maintenance(warehouse, ctrl, int(sys.argv[4]))

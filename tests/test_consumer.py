@@ -948,21 +948,35 @@ def test_cooperative_multi_generation_gap_is_lost_all(topic_store):
 # -- r12: consumer-API fast poll (VERDICT r11 #3) ------------------------
 
 
-def test_fast_poll_matches_spark_poll_exactly(topic_store):
-    """The pyarrow fast-poll lane and the Spark microbatch lane must
-    return identical records — same offsets, keys, values, headers and
-    timestamps — for the same positions. fast_path_max=0 forces the
-    Spark lane on the control consumer."""
-    fill(topic_store, 120)
+def test_fast_poll_matches_spark_poll_exactly(topic_store, monkeypatch):
+    """The driver lane and the Spark lane must return identical records —
+    same offsets, keys, values, headers and timestamps, as ``records`` and
+    as ``rows`` — for the same positions, over a topic that holds both
+    fast (``append_rows``) and Spark-written (``ingest``) segments. A
+    driver-poll bound of 0 forces the Spark lane on the control
+    consumer."""
+    from flux_spark import consumer as consumer_mod
+
+    prod = fill(topic_store, 120)
+    prod.ingest(
+        "t",
+        topic_store.spark.createDataFrame(
+            [(f"s{i}", f"k{i % 9}") for i in range(30)], "value string, key string"
+        ),
+    )
+    prod.send("t", value="h", key="k0", headers=[("a", b"1"), ("a", None)])
+    prod.flush()
     fast = FluxConsumer(topic_store, group_id="gf")
-    slow = FluxConsumer(topic_store, group_id="gs", fast_path_max=0)
+    slow = FluxConsumer(topic_store, group_id="gs")
     fast.subscribe(["t"])
     slow.subscribe(["t"])
     rf = fast.poll()
+    monkeypatch.setattr(consumer_mod, "_DRIVER_POLL_MAX_RECORDS", 0)
     rs = slow.poll()
-    assert rf.rows is not None          # served by the fast lane
-    assert rs.rows is None              # served by the Spark lane
-    assert rf.count == rs.count == 120
+    assert rf.lane == "driver"
+    assert rs.lane == "spark"
+    assert rf.count == rs.count == 151
+    assert rf.records.dtypes == rs.records.dtypes
     key = lambda r: (r["partition"], r["offset"])  # noqa: E731
     got = sorted(
         (
@@ -997,6 +1011,8 @@ def test_fast_poll_matches_spark_poll_exactly(topic_store):
     assert sorted(
         (r["partition"], r["offset"], r["value"]) for r in rf.rows
     ) == [(d["partition"], d["offset"], d["value"]) for d in got]
+    # and with the Spark lane's rows, field for field
+    assert sorted(rf.rows, key=key) == sorted(rs.rows, key=key)
     # both lanes advanced positions identically; nothing left
     assert not fast.poll().should_continue
     assert not slow.poll().should_continue
@@ -1011,7 +1027,7 @@ def test_fast_poll_respects_pause_and_pagination(topic_store):
     c.subscribe(["t"])
     c.pause("t", [0])
     res = c.poll(max_records_per_partition=5)
-    assert res.rows is not None
+    assert res.lane == "driver"
     parts = {r["partition"] for r in res.rows}
     assert 0 not in parts and parts <= {1, 2}
     per = {}
@@ -1020,7 +1036,7 @@ def test_fast_poll_respects_pause_and_pagination(topic_store):
     assert all(len(v) == 5 for v in per.values())
     c.resume("t")
     rest = c.poll()
-    assert rest.rows is not None
+    assert rest.lane == "driver"
     assert res.count + rest.count == 90
 
 
@@ -1031,13 +1047,13 @@ def test_fast_poll_commit_resume_cycle(topic_store):
     c = FluxConsumer(topic_store, group_id="g")
     c.subscribe(["t"])
     r1 = c.poll()
-    assert r1.rows is not None and r1.count == 40
+    assert r1.lane == "driver" and r1.count == 40
     c.commit_offsets()
     fill(topic_store, 15)
     c2 = FluxConsumer(topic_store, group_id="g")
     c2.subscribe(["t"])
     r2 = c2.poll()
-    assert r2.rows is not None
+    assert r2.lane == "driver"
     assert r2.count == 15
     assert {r["value"] for r in r2.rows} == {f"v{i}" for i in range(15)}
 
@@ -1066,8 +1082,46 @@ def test_fast_poll_under_delivery_keeps_positions(topic_store, monkeypatch):
     assert {p: c.position("t", p) for p in range(3)} == before
     monkeypatch.setattr(topic_store, "read_since", real)
     res = c.poll()
-    assert res.rows is not None and res.count == 30
+    assert res.lane == "driver" and res.count == 30
     got = [(r["partition"], r["offset"]) for r in res.rows]
     hwm = topic_store.high_water_marks("t")
     assert sorted(got) == [(p, o) for p in range(3) for o in range(hwm[p])]
     assert not c.poll().should_continue
+
+
+def test_poll_lane_follows_the_record_bound(topic_store, monkeypatch):
+    """A poll of at most ``_DRIVER_POLL_MAX_RECORDS`` new records is read
+    on the driver, one more runs the Spark scan; both results carry the
+    same fields."""
+    from flux_spark import consumer as consumer_mod
+
+    monkeypatch.setattr(consumer_mod, "_DRIVER_POLL_MAX_RECORDS", 50)
+    fill(topic_store, 50)
+    c = FluxConsumer(topic_store, group_id="g")
+    c.subscribe(["t"])
+    at = c.poll()
+    assert (at.lane, at.count, at.should_continue) == ("driver", 50, True)
+    fill(topic_store, 51)
+    above = c.poll()
+    assert (above.lane, above.count, above.should_continue) == ("spark", 51, True)
+    assert above.records.count() == 51
+    assert {r["value"] for r in above.rows} == {f"v{i}" for i in range(51)}
+    assert len(at.rows) == 50 and at.records.count() == 50
+
+
+def test_empty_poll_is_a_driver_poll(topic_store, monkeypatch):
+    """An empty poll takes the driver lane and starts no JVM work: no
+    ``createDataFrame`` unless the caller asks for ``records``."""
+    fill(topic_store, 12)
+    c = FluxConsumer(topic_store, group_id="g")
+    c.subscribe(["t"])
+    assert c.poll().count == 12
+
+    def boom(*a, **k):
+        raise AssertionError("createDataFrame called by an empty poll")
+
+    monkeypatch.setattr(topic_store.spark, "createDataFrame", boom)
+    res = c.poll()
+    assert res.lane == "driver"
+    assert res.rows == []
+    assert res.count == 0 and res.should_continue is False

@@ -924,7 +924,9 @@ def test_concurrent_soak_produce_consume_maintenance(spark, store):
     gap-free delivery to every group, committed offsets draining to the
     high-water marks (zero lag), and that maintenance actually ran
     mid-traffic — the flock + atomic-swap + recovery machinery
-    composing, not just passing its per-role tests."""
+    composing, not just passing its per-role tests. Both groups run with
+    the driver-poll bound at 0, so every non-empty poll takes the Spark
+    lane (the driver lane is soaked by the test below)."""
     import json
     import os
     import subprocess
@@ -946,7 +948,7 @@ def test_concurrent_soak_produce_consume_maintenance(spark, store):
 
     procs = (
         [launch("producer", i, n_batches, rows) for i in range(n_producers)]
-        + [launch("consumer", g, n_producers) for g in groups]
+        + [launch("consumer", g, n_producers, "spark") for g in groups]
         + [launch("maintenance", n_producers)]
     )
     fails = []
@@ -978,7 +980,9 @@ def test_concurrent_soak_produce_consume_maintenance(spark, store):
     # every group saw every record exactly once, offsets gap-free per group
     for g in groups:
         with open(os.path.join(ctrl, f"consumer-{g}.out")) as fh:
-            seen = json.load(fh)["seen"]
+            data = json.load(fh)
+        assert data["spark_polls"] >= 1 and data["fast_polls"] == 0, (g, data)
+        seen = data["seen"]
         assert {v for _, _, v in seen} == expected, g
         per_part = {}
         for part, off, _ in seen:
@@ -1003,16 +1007,16 @@ def test_concurrent_soak_produce_consume_maintenance(spark, store):
 def test_concurrent_soak_fastlane_under_maintenance(spark, store):
     """r13 (VERDICT r12 #7): the ms-class consumer fast poll under
     maintenance contention. One committing group drains EVERY poll via
-    the driver-side pyarrow lane (fast_path_max raised above the soak's
-    batch sizes) while producers write and an aggressive compaction loop
-    swaps segment directories underneath it. read_since skips a file it
-    cannot open (one a swap just removed), poll raises when the read
-    comes up short of its plan, and the child re-polls — safe, because a
-    raising fast poll leaves positions where they were. Proves that
-    mechanism holds the same exactly-once, gap-free, zero-lag bar as the
-    Spark lane — and asserts
-    the polls actually WERE fast-lane served, so the test cannot
-    silently degrade into re-covering the Spark path."""
+    the driver-side pyarrow lane (the default driver-poll bound is above
+    the soak's 1,200 records) while producers write and an aggressive
+    compaction loop swaps segment directories underneath it. read_since
+    skips a file it cannot open (one a swap just removed), poll raises
+    when the read comes up short of its plan, and the child re-polls —
+    safe, because a raising fast poll leaves positions where they were.
+    Proves that mechanism holds the same exactly-once, gap-free, zero-lag
+    bar as the Spark lane — and asserts the polls actually WERE
+    fast-lane served, so the test cannot silently degrade into
+    re-covering the Spark path."""
     import json
     import os
     import subprocess
@@ -1033,7 +1037,7 @@ def test_concurrent_soak_fastlane_under_maintenance(spark, store):
 
     procs = (
         [launch("producer", i, n_batches, rows) for i in range(n_producers)]
-        + [launch("consumer", "soak-fast", n_producers, "fast")]
+        + [launch("consumer", "soak-fast", n_producers)]
         + [launch("maintenance", n_producers)]
     )
     fails = []
@@ -1211,6 +1215,33 @@ def test_read_since_opens_only_the_tail_segment(spark, store, monkeypatch):
     got = store.read_since("named", 0, 0)
     assert [r["offset"] for r in got] == list(range(hwm))
     assert [r["value"] for r in got[:4]] == ["v0-0", "v0-1", "v0-2", "v1-0"]
+
+
+def test_read_since_timestamps_are_utc_aware_on_every_segment_layout(
+    spark, store
+):
+    """Spark-written segments store timestamps as INT96 (read back as a
+    zone-less ``timestamp[ns]``), fast segments as ``timestamp[us, UTC]``;
+    read_since returns the same UTC-aware instant ``read()`` does for
+    both, so rows of one poll compare and sort by timestamp."""
+    from datetime import timedelta
+
+    from flux_spark import FluxProducer
+
+    topic = "tz"
+    store.catalog.create_topic(topic, 1)
+    prod = FluxProducer(store)
+    prod.ingest(topic, _mk_records(spark, 2, partition=0), ordering_col="seq")
+    prod.send(topic, value="fast", partition=0)
+    prod.flush()
+    got = store.read_since(topic, 0, 0)
+    assert len(got) == 3
+    assert all(r["timestamp"].utcoffset() == timedelta(0) for r in got)
+    want = {
+        r["offset"]: r["timestamp"]
+        for r in store.read(topic, partitions=[0]).toArrow().to_pylist()
+    }
+    assert {r["offset"]: r["timestamp"] for r in got} == want
 
 
 def test_read_since_mixed_segment_layouts_match_spark_read(

@@ -119,3 +119,18 @@ def test_query_persists_release_on_clear_cache(spark, sf_dir, monkeypatch):
     assert jsc.getPersistentRDDs().size() > before  # persists were live
     spark.catalog.clearCache()
     assert jsc.getPersistentRDDs().size() <= before
+
+
+def test_input_bytes_sizes_uri_paths(spark, sf_dir):
+    """A ``scheme://`` path is sized through Hadoop's FileSystem, not
+    read as 0 bytes (which would silently turn off the persist gate)."""
+    import os
+
+    from flux_spark.analytics.registry import input_bytes
+
+    local = input_bytes(sf_dir, "events")
+    assert local == os.path.getsize(f"{sf_dir}/events.parquet") > 0
+    uri = "file://" + os.path.abspath(sf_dir)
+    assert input_bytes(uri, "events") == local
+    with pytest.raises(RuntimeError, match="nosuch.parquet"):
+        input_bytes(uri, "nosuch")

@@ -38,9 +38,13 @@ file-commit protocol gives committed-write durability — a deliberate upgrade
 (SURVEY.md §7 risk 4).
 
 Scale notes (100 TB design point): one shuffle per ingest batch, hash-
-partitioned on the log partition id; `maxRecordsPerFile` bounds file size;
-`compact()` is the OPTIMIZE-style maintenance job that rewrites small files
-into large offset-sorted ones to keep listing + pruning cheap.
+partitioned on the log partition id. Every Spark lane (append, mirror and
+the rewrites) writes segments through one writer, ``_write_segments``:
+offset-sorted files rolled at ``maxRecordsPerFile``. ``compact()``,
+``compact_by_key()`` and ``truncate_before()`` are one locked
+rewrite-and-swap (``_rewrite``) that differ only in their filter;
+``compact()`` is the OPTIMIZE-style job that rewrites small files into
+large offset-sorted ones to keep listing + pruning cheap.
 """
 
 from __future__ import annotations
@@ -48,20 +52,17 @@ from __future__ import annotations
 import contextlib
 import os
 import re
-import shutil
 import threading
 import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame, Row, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, Row, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .catalog import Catalog, atomic_dir_swap
 from .errors import InvalidTopicError, ValidationError
 from .routing import assign_partitions
-from pyspark.sql.types import IntegerType, StructField
-
 from .schema import RECORD_SCHEMA, STORED_FILE_SCHEMA
 
 # stored columns + the Hive-style partition-dir column
@@ -73,6 +74,17 @@ _ARRIVAL = "__arrival"
 
 # fast-lane segment name; zero padding makes name order equal offset order
 _FAST_SEGMENT = re.compile(r"part-fast-(\d{20})-(\d{20})-[0-9a-f]{32}\.parquet")
+
+
+def _offset_stats(rg) -> tuple[int, int] | None:
+    """``(min, max)`` of the ``offset`` column in one row group's footer
+    statistics, or None when the writer recorded no min/max."""
+    for ci in range(rg.num_columns):
+        col = rg.column(ci)
+        if col.path_in_schema == "offset":
+            st = col.statistics
+            return (st.min, st.max) if st is not None and st.has_min_max else None
+    return None
 
 
 class LogStore:
@@ -218,15 +230,55 @@ class LogStore:
                 intent.parent.mkdir(parents=True, exist_ok=True)
                 intent.touch()
             stats = write(self.catalog.get_topic(topic))  # hwm under the lock
-            # advanced even for an empty batch so its batch_id is marked
-            self.catalog.advance_hwm(
-                topic,
-                {p: last + 1 for p, (_, last) in stats.items()},
-                batch_id=batch_id,
-            )
+            # advanced even for an empty batch so its batch_id is marked;
+            # an empty batch without one (an up-to-date mirror) saves nothing
+            if stats or batch_id is not None:
+                self.catalog.advance_hwm(
+                    topic,
+                    {p: last + 1 for p, (_, last) in stats.items()},
+                    batch_id=batch_id,
+                )
             if intent is not None:
                 intent.unlink(missing_ok=True)
             return stats
+
+    def _write_segments(self, df: DataFrame, path, mode: str) -> None:
+        """The one Spark segment writer. ``df`` arrives hash-partitioned on
+        ``partition``, so each ``partition=<p>`` dir is written by one task,
+        in offset order, rolling a file every ``max_records_per_file``
+        records. The sort leads with ``partition``: a partitioned write
+        requires that order, and given ``offset`` alone the planner adds
+        its own sort on ``partition`` and drops the offset sort."""
+        (
+            df.sortWithinPartitions("partition", "offset")
+            .write.mode(mode)
+            .option("maxRecordsPerFile", self.max_records_per_file)
+            .option("compression", self.compression)
+            .partitionBy("partition")
+            .parquet(str(path))
+        )
+
+    def _observed_write(
+        self, topic: str, df: DataFrame, n: int
+    ) -> dict[int, tuple[int, int]]:
+        """Append ``df`` to the topic's segments and return the written
+        ``{partition: (first, last)}`` offsets. The ranges are collected
+        DURING the write via the Observation API, so the write stays one
+        job over the data (no persist + second stats pass); 2 aggregates
+        per partition, fine for realistic topic widths (Kafka-style
+        10s-1000s)."""
+        obs = Observation()
+        aggs = []
+        for p in range(n):
+            on_p = F.when(F.col("partition") == p, F.col("offset"))
+            aggs += [F.min(on_p).alias(f"min_{p}"), F.max(on_p).alias(f"max_{p}")]
+        self._write_segments(df.observe(obs, *aggs), self.topic_path(topic), "append")
+        vals = obs.get
+        return {
+            p: (int(vals[f"min_{p}"]), int(vals[f"max_{p}"]))
+            for p in range(n)
+            if vals.get(f"min_{p}") is not None
+        }
 
     def append(
         self,
@@ -322,33 +374,7 @@ class LogStore:
                 "value",
                 "headers",
             )
-            # Per-partition offset ranges are collected DURING the write via
-            # the Observation API — ingest is exactly one job over the data
-            # (no persist + second stats pass). 2 aggregates per partition;
-            # fine for realistic topic widths (Kafka-style 10s-1000s).
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            aggs = []
-            for p in range(n):
-                on_p = F.when(F.col("partition") == p, F.col("offset"))
-                aggs.append(F.min(on_p).alias(f"min_{p}"))
-                aggs.append(F.max(on_p).alias(f"max_{p}"))
-            out = out.observe(obs, aggs[0], *aggs[1:])
-            (
-                out.sortWithinPartitions("offset")
-                .write.mode("append")
-                .option("maxRecordsPerFile", self.max_records_per_file)
-                .option("compression", self.compression)
-                .partitionBy("partition")
-                .parquet(self.topic_path(topic))
-            )
-            vals = obs.get
-            return {
-                p: (int(vals[f"min_{p}"]), int(vals[f"max_{p}"]))
-                for p in range(n)
-                if vals.get(f"min_{p}") is not None
-            }
+            return self._observed_write(topic, out, n)
 
         return self._produce_batch(topic, batch_id, write)
 
@@ -650,18 +676,8 @@ class LogStore:
                     # short and FluxConsumer.poll raises)
                     continue
                 for rg in range(pf.metadata.num_row_groups):
-                    rgm = pf.metadata.row_group(rg)
-                    st = None
-                    for ci in range(rgm.num_columns):
-                        col = rgm.column(ci)
-                        if col.path_in_schema == "offset":
-                            st = col.statistics
-                            break
-                    if (
-                        st is not None
-                        and st.has_min_max
-                        and (st.max < lo or st.min >= hwm)
-                    ):
+                    span = _offset_stats(pf.metadata.row_group(rg))
+                    if span is not None and (span[1] < lo or span[0] >= hwm):
                         continue
                     for rec in pf.read_row_group(rg).to_pylist():
                         if lo <= rec["offset"] < hwm:
@@ -737,14 +753,10 @@ class LogStore:
                     f.unlink(missing_ok=True)
                     removed += 1
                     continue
-                names = [
-                    md.schema.column(i).name for i in range(len(md.schema))
-                ]
-                idx = names.index("offset")
                 mins = [
-                    md.row_group(g).column(idx).statistics.min
+                    span[0]
                     for g in range(md.num_row_groups)
-                    if md.row_group(g).column(idx).statistics is not None
+                    if (span := _offset_stats(md.row_group(g))) is not None
                 ]
                 if mins and min(mins) >= hwm:
                     f.unlink(missing_ok=True)
@@ -792,34 +804,15 @@ class LogStore:
         whole files below the watermark first and rewrite only the
         boundary file.
 
-        Holds the topic write lock for the WHOLE read-rewrite-swap (not
-        just the swap): an append committing between the rewrite's
-        snapshot and the directory swap would otherwise be silently
-        erased by the swap (caught by
-        tests/test_log.py::test_compact_races_live_appends)."""
-        with self._write_lock(topic):
-            meta = self.catalog.get_topic(topic)
-            n = meta.num_partitions
-            keep = None
-            for p, lo in min_offsets.items():
-                c = (F.col("partition") == int(p)) & (F.col("offset") >= int(lo))
-                keep = c if keep is None else (keep | c)
-            untouched = ~F.col("partition").isin([int(p) for p in min_offsets])
-            cond = untouched if keep is None else (keep | untouched)
-            df = self.read(topic).drop("topic").where(cond)
-            tmp = self.warehouse / f".trunc-{topic}-{uuid.uuid4().hex[:8]}"
-            (
-                df.repartition(n, "partition")
-                .sortWithinPartitions("offset")
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", self.max_records_per_file)
-                .option("compression", self.compression)
-                .partitionBy("partition")
-                .parquet(str(tmp))
-            )
-            atomic_dir_swap(
-                Path(self.topic_path(topic)), tmp, self.warehouse / ".swap.lock"
-            )
+        Runs as :meth:`_rewrite`, under the topic write lock for the
+        whole read-rewrite-swap."""
+        keep = None
+        for p, lo in min_offsets.items():
+            c = (F.col("partition") == int(p)) & (F.col("offset") >= int(lo))
+            keep = c if keep is None else (keep | c)
+        untouched = ~F.col("partition").isin([int(p) for p in min_offsets])
+        cond = untouched if keep is None else (keep | untouched)
+        self._rewrite(topic, "trunc", lambda df: df.where(cond))
 
     def create_view(self, topic: str, view_name: str | None = None) -> str:
         """Register the topic log as a temp view for ``spark.sql`` access
@@ -862,11 +855,7 @@ class LogStore:
         self.truncate_before(topic, cuts)
         return cuts
 
-    def maintenance(
-        self,
-        min_files_to_compact: int = 16,
-        compact_offsets: bool = True,
-    ) -> dict[str, str]:
+    def maintenance(self, min_files_to_compact: int = 16) -> dict[str, str]:
         """One housekeeping pass over the warehouse — the cron-job entry
         point a deployment schedules (Kafka's LogCleaner thread analog):
 
@@ -904,48 +893,45 @@ class LogStore:
                 actions[topic] = (
                     actions.get(topic, "") + "+compact"
                 ).lstrip("+")
-        if compact_offsets and (self.warehouse / "_offsets").is_dir():
+        if (self.warehouse / "_offsets").is_dir():
             from .consumer import OffsetStore
 
             kept = OffsetStore(self).compact()
             actions["_offsets"] = f"compacted ({kept} rows kept)"
         return actions
 
-    def compact(self, topic: str, target_records_per_file: int | None = None) -> None:
-        """Rewrite each partition's many small segment files into few large
-        offset-sorted ones (small-file compaction / OPTIMIZE).
+    def _rewrite(self, topic: str, label: str, transform) -> None:
+        """The one maintenance rewrite-and-swap: write
+        ``transform(committed records)`` to a temp dir (``.<label>-...``)
+        through :meth:`_write_segments`, then swap it in for the topic dir
+        atomically.
 
-        Keeps rowgroup-stat pruning effective as segment counts grow; the
-        poll-latency mitigation from SURVEY.md §7 risk 2.
-
-        Runs entirely under the topic write lock: the rewrite reads a
-        snapshot, so an append landing between snapshot and swap would be
-        erased if producers weren't excluded for the whole operation
-        (regression-tested by test_compact_races_live_appends). Producers
-        block for the compaction window — the Kafka-cleaner trade; at
-        warehouse scale the cleaner compacts partition-by-partition to
-        shrink each window.
-        """
+        Holds the topic write lock for the WHOLE read-rewrite-swap (not
+        just the swap): an append committing between the rewrite's
+        snapshot and the directory swap would otherwise be silently
+        erased by the swap (caught by
+        tests/test_log.py::test_compact_races_live_appends). Producers
+        block for the rewrite window — the Kafka-cleaner trade; at
+        warehouse scale the cleaner rewrites partition-by-partition to
+        shrink each window."""
         with self._write_lock(topic):
-            meta = self.catalog.get_topic(topic)
-            n = meta.num_partitions
-            tmp = self.warehouse / f".compact-{topic}-{uuid.uuid4().hex[:8]}"
-            df = self.read(topic).drop("topic")
-            (
-                df.repartition(n, "partition")
-                .sortWithinPartitions("offset")
-                .write.mode("overwrite")
-                .option(
-                    "maxRecordsPerFile",
-                    target_records_per_file or self.max_records_per_file,
-                )
-                .option("compression", self.compression)
-                .partitionBy("partition")
-                .parquet(str(tmp))
-            )
+            n = self.catalog.get_topic(topic).num_partitions
+            tmp = self.warehouse / f".{label}-{topic}-{uuid.uuid4().hex[:8]}"
+            df = transform(self.read(topic).drop("topic"))
+            self._write_segments(df.repartition(n, "partition"), tmp, "overwrite")
             atomic_dir_swap(
                 Path(self.topic_path(topic)), tmp, self.warehouse / ".swap.lock"
             )
+
+    def compact(self, topic: str) -> None:
+        """Rewrite each partition's many small segment files into few large
+        offset-sorted ones of up to ``max_records_per_file`` records
+        (small-file compaction / OPTIMIZE), as one :meth:`_rewrite`.
+
+        Keeps rowgroup-stat pruning effective as segment counts grow; the
+        poll-latency mitigation from SURVEY.md §7 risk 2.
+        """
+        self._rewrite(topic, "compact", lambda df: df)
 
     def compact_by_key(self, topic: str) -> None:
         """Kafka-style log compaction: per (partition, key) retain only the
@@ -959,15 +945,10 @@ class LogStore:
         One shuffle keyed on (partition, key) — at warehouse scale the
         cleaner would run per-partition over only the dirty ratio, but the
         plan shape (window max-offset per key, no driver loop) is the one
-        that scales. Entire read-rewrite-swap runs under the topic write
-        lock so a concurrent append can't land between snapshot and swap
-        and be erased (see compact())."""
-        from pyspark.sql import Window
+        that scales. Runs as :meth:`_rewrite`, so a concurrent append can't
+        land between snapshot and swap and be erased."""
 
-        with self._write_lock(topic):
-            meta = self.catalog.get_topic(topic)
-            n = meta.num_partitions
-            df = self.read(topic).drop("topic")
+        def latest_per_key(df: DataFrame) -> DataFrame:
             w = Window.partitionBy("partition", "key").orderBy(F.col("offset").desc())
             keyed = (
                 df.where(F.col("key").isNotNull())
@@ -975,20 +956,9 @@ class LogStore:
                 .where((F.col("__rn") == 1) & F.col("value").isNotNull())
                 .drop("__rn")
             )
-            compacted = df.where(F.col("key").isNull()).unionByName(keyed)
-            tmp = self.warehouse / f".kcompact-{topic}-{uuid.uuid4().hex[:8]}"
-            (
-                compacted.repartition(n, "partition")
-                .sortWithinPartitions("offset")
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", self.max_records_per_file)
-                .option("compression", self.compression)
-                .partitionBy("partition")
-                .parquet(str(tmp))
-            )
-            atomic_dir_swap(
-                Path(self.topic_path(topic)), tmp, self.warehouse / ".swap.lock"
-            )
+            return df.where(F.col("key").isNull()).unionByName(keyed)
+
+        self._rewrite(topic, "kcompact", latest_per_key)
 
     def describe_topic(self, topic: str) -> DataFrame:
         """AdminClient.describeTopics analog: one row per partition with
@@ -1035,7 +1005,8 @@ class LogStore:
         against the mirror.
 
         Bypasses append's routing/offset assignment on purpose — a mirror
-        must not re-route. One partition-pruned scan + partitioned write;
+        must not re-route. One partition-pruned scan + partitioned write,
+        committed through the produce protocol (:meth:`_produce_batch`);
         incremental refresh copies only offsets past the mirror's hwm, so
         repeated invocations are cheap and idempotent.
         """
@@ -1055,43 +1026,18 @@ class LogStore:
                 f"{self.catalog.get_topic(topic).num_partitions} partitions, "
                 f"source has {meta.num_partitions}"
             )
-        with self._write_lock(topic):
-            have = self.catalog.get_topic(topic)
-            starts = {p: have.next_offset(p) for p in range(meta.num_partitions)}
+        n = meta.num_partitions
+
+        def write(have) -> dict[int, tuple[int, int]]:
+            starts = {p: have.next_offset(p) for p in range(n)}
             # hwm comparison is catalog-only: an up-to-date mirror refresh
             # costs zero jobs (and Observation can't report on empty jobs)
-            if all(
-                meta.next_offset(p) <= starts[p]
-                for p in range(meta.num_partitions)
-            ):
-                return
+            if all(meta.next_offset(p) <= starts[p] for p in range(n)):
+                return {}
             fresh = src_store.read(topic, start_offsets=starts).drop("topic")
-            from pyspark.sql import Observation
+            return self._observed_write(topic, fresh.repartition(n, "partition"), n)
 
-            obs = Observation()
-            aggs = []
-            for p in range(meta.num_partitions):
-                on_p = F.when(F.col("partition") == p, F.col("offset"))
-                aggs.append(F.max(on_p).alias(f"max_{p}"))
-            fresh = fresh.observe(obs, aggs[0], *aggs[1:])
-            (
-                fresh.repartition(meta.num_partitions, "partition")
-                .sortWithinPartitions("offset")
-                .write.mode("append")
-                .option("maxRecordsPerFile", self.max_records_per_file)
-                .option("compression", self.compression)
-                .partitionBy("partition")
-                .parquet(self.topic_path(topic))
-            )
-            vals = obs.get
-            self.catalog.advance_hwm(
-                topic,
-                {
-                    p: int(vals[f"max_{p}"]) + 1
-                    for p in range(meta.num_partitions)
-                    if vals.get(f"max_{p}") is not None
-                },
-            )
+        self._produce_batch(topic, None, write)
 
     def materialize(self, topic: str) -> DataFrame:
         """KTable-style snapshot of a keyed changelog topic: the current
@@ -1106,8 +1052,6 @@ class LogStore:
         One shuffle keyed on the record key; at scale the window's partial
         max folds map-side and the scan prunes to (key, value, partition,
         offset)."""
-        from pyspark.sql import Window
-
         df = self.read(topic).where(F.col("key").isNotNull())
         w = Window.partitionBy("key").orderBy(
             F.col("offset").desc(), F.col("partition").desc()

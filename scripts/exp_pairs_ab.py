@@ -33,7 +33,7 @@ def main() -> None:
     variants = sys.argv[2].split(",")
     repeat = int(sys.argv[3]) if len(sys.argv) > 3 else 1
 
-    from flux_spark.analytics.operators import basket_group
+    from flux_spark.analytics.operators import basket_group, pairs_from_basket
     from flux_spark.session import get_spark
 
     extra = {"spark.ui.showConsoleProgress": "false"}
@@ -80,10 +80,7 @@ def main() -> None:
         if variant == "basket":
             return g
         if variant == "base":
-            p = anchors_pairs(g)
-            return p.groupBy("item_a", "item_b").agg(
-                F.count("*").alias("n_keys")
-            )
+            return pairs_from_basket(g)
         if variant == "repart":
             p = anchors_pairs(g).repartition("item_a", "item_b")
             return p.groupBy("item_a", "item_b").agg(

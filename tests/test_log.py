@@ -149,6 +149,84 @@ def test_compact_preserves_records(spark, store):
     assert before == after
 
 
+def _jobs_and_stages(spark, fn) -> tuple[int, int]:
+    """Run ``fn`` under a fresh job group; return how many Spark jobs it
+    launched and how many distinct stage ids those jobs hold (AQE runs
+    each shuffle map stage as its own job, so a skipped stage counts)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the async listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    return len(jobs), len(stages)
+
+
+def test_spark_append_job_and_stage_count(spark, store):
+    """An ingest is one shuffle: the shuffle-map job plus the write job
+    (whose re-listed map stage is skipped) — 2 jobs, 3 stage ids."""
+    store.catalog.create_topic("jobs", 3)
+    df = _mk_records(spark, 60)
+    assert _jobs_and_stages(
+        spark, lambda: store.append("jobs", df, ordering_col="seq")
+    ) == (2, 3)
+
+
+@pytest.mark.parametrize(
+    "path", ["append", "compact", "truncate_before", "compact_by_key", "mirror_topic"]
+)
+def test_spark_writes_roll_sorted_segments(spark, tmp_path, path):
+    """Every Spark lane that writes segments honours one contract: files
+    roll at ``max_records_per_file`` records, each file's offsets ascend,
+    and the footer codec is the store's ``compression``."""
+    import pyarrow.parquet as pq
+
+    from flux_spark.log import LogStore
+
+    store = LogStore(spark, tmp_path / "wh", max_records_per_file=4)
+    # 30 records, 2 partitions; key k<j> lives in partition j % 2 twice,
+    # so compact_by_key keeps 8 + 7 records, more than one file each
+    df = spark.createDataFrame(
+        [(i, (i % 15) % 2, f"k{i % 15}", f"v{i}") for i in range(30)],
+        "seq long, partition int, key string, value string",
+    )
+    target = store
+    if path == "mirror_topic":
+        store.max_records_per_file = 100_000
+        target = LogStore(spark, tmp_path / "mirror", max_records_per_file=4)
+    store.catalog.create_topic("seg", 2)
+    store.append("seg", df, ordering_col="seq")
+    if path == "compact":
+        store.compact("seg")
+    elif path == "truncate_before":
+        store.truncate_before("seg", {0: 2, 1: 3})
+    elif path == "compact_by_key":
+        store.compact_by_key("seg")
+    elif path == "mirror_topic":
+        target.mirror_topic(store, "seg")
+    files_per_partition = {}
+    for p in range(2):
+        files = sorted((target.warehouse / "seg" / f"partition={p}").glob("*.parquet"))
+        files_per_partition[p] = len(files)
+        for fp in files:
+            pf = pq.ParquetFile(fp)
+            offsets = pf.read(columns=["offset"]).column("offset").to_pylist()
+            assert 0 < len(offsets) <= 4, fp.name
+            assert offsets == sorted(offsets), fp.name
+            for rg in range(pf.metadata.num_row_groups):
+                codec = pf.metadata.row_group(rg).column(0).compression
+                assert codec.lower() == target.compression, fp.name
+    assert all(n > 1 for n in files_per_partition.values()), files_per_partition
+
+
 def test_timestamp_defaulted(spark, store):
     store.catalog.create_topic("t", 1)
     df = spark.createDataFrame([(0, "v")], "seq long, value string")
@@ -555,7 +633,7 @@ def test_mirror_topic_incremental_and_offset_preserving(spark, store, tmp_path):
         map(key, store.read("m").collect())
     )
     # up-to-date refresh is a zero-job no-op
-    dst.mirror_topic(store, "m")
+    assert _jobs_and_stages(spark, lambda: dst.mirror_topic(store, "m")) == (0, 0)
     assert dst.read("m").count() == 20
     # new source records mirror incrementally at their original offsets
     more = spark.range(20, 26).selectExpr(

@@ -225,6 +225,16 @@ ANALYTICS_HEADLINE = [
 ]
 
 
+def force(spark, build, label: str) -> float:
+    """Run one query to completion; return the wall seconds of ``build()``
+    plus its noop-sink write (the forcing rule in the module docstring).
+    ``label`` becomes the Spark job description of the run."""
+    spark.sparkContext.setJobDescription(label)
+    t0 = time.perf_counter()
+    build().write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
 def concurrent_mode(spark, registry, sf_dir: str, streams: int) -> None:
     """--concurrent N: the TPC-H "throughput test" shape — N client
     threads each run the analytics headline (disjoint round-robin
@@ -243,11 +253,12 @@ def concurrent_mode(spark, registry, sf_dir: str, streams: int) -> None:
         spark.sparkContext.setLocalProperty(
             "spark.scheduler.pool", f"stream{i}"
         )
+        # no clearCache() here: it is session-global and would unpersist
+        # another stream's tables in the middle of its query
         t0 = time.perf_counter()
         for name in slices[i]:
-            registry[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            label = f"stream{i}: {name}"
+            force(spark, lambda: registry[name](spark, sf_dir), label)
         wall[i] = round(time.perf_counter() - t0, 2)
 
     threads = [
@@ -276,6 +287,14 @@ def concurrent_mode(spark, registry, sf_dir: str, streams: int) -> None:
 
 
 def main() -> None:
+    streams = None
+    if "--concurrent" in sys.argv:
+        # a bad stream count exits naming it: there is no fallback count
+        i = sys.argv.index("--concurrent") + 1
+        value = sys.argv[i] if i < len(sys.argv) else ""
+        streams = int(value) if value.isdigit() else 0
+        if streams < 1:
+            sys.exit(f"bench.py: --concurrent needs a positive integer, got {value!r}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     try:
@@ -465,11 +484,7 @@ def main() -> None:
         if s
     }
     registry = entry_mod.queries()
-    if "--concurrent" in sys.argv:
-        try:
-            streams = int(sys.argv[sys.argv.index("--concurrent") + 1])
-        except (IndexError, ValueError):
-            streams = 4
+    if streams is not None:
         concurrent_mode(spark, registry, sf_dir, streams)
         return
     for name in ANALYTICS_HEADLINE:
@@ -480,13 +495,10 @@ def main() -> None:
         # on stdout is unchanged; on a multi-hour sf100 wall this is the
         # only way to attribute a mid-run failure to its query
         print(f"[bench] headline: {name}", file=sys.stderr, flush=True)
-        spark.sparkContext.setJobDescription(f"headline: {name}")
+        label = f"headline: {name}"
         for _ in range(rounds):
-            t0 = time.perf_counter()
-            registry[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs[name].append(round(time.perf_counter() - t0, 4))
+            wall = force(spark, lambda: registry[name](spark, sf_dir), label)
+            runs[name].append(round(wall, 4))
             # drop persisted relations between runs: Spark's CacheManager
             # matches by analyzed plan, so a repeat run of a query that
             # persist()s (emb_semantic_dedup, emb_near_dup_lsh) would

@@ -18,6 +18,7 @@ README.md:198).
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import os
 import threading
@@ -125,11 +126,35 @@ class OffsetStore:
             best[(r["group_id"], r["topic"], r["partition"])] = r
         return list(best.values())
 
+    @contextlib.contextmanager
+    def _locked(self, rewrite: bool = False):
+        """Hold the offsets flock with crash recovery run inside it; a
+        ``rewrite`` takes the in-process seq lock first. The flock keeps a
+        commit from appending into, and a fetch from listing, a directory
+        a rewrite is swapping out. Recovery runs INSIDE the lock: a
+        committer that merely checked before blocking could append into a
+        directory a dying rewrite had renamed away, recreating it with one
+        row and making the next recovery discard every older commit as a
+        stale backup."""
+        from .catalog import file_lock
+
+        with self._seq_lock if rewrite else contextlib.nullcontext():
+            with file_lock(self.store.warehouse / ".offsets.lock"):
+                self._recover()
+                yield
+
+    def _swap_in(self, rows: list[dict]) -> None:
+        """Make ``rows`` the whole ``_offsets`` log: write them to a temp
+        directory and ``atomic_dir_swap`` it in (under ``_locked(True)``)."""
+        from .catalog import atomic_dir_swap
+
+        tmp = self.store.warehouse / f".offsets-rewrite-{uuid.uuid4().hex[:8]}"
+        self._write(tmp, rows)
+        atomic_dir_swap(Path(self.path), tmp, self.store.warehouse / ".swap.lock")
+
     def commit(
         self, group_id: str, offsets: dict[tuple[str, int], int], metadata: str | None = None
     ) -> None:
-        from .catalog import file_lock
-
         if not offsets:
             return
         now = time.time()
@@ -139,14 +164,7 @@ class OffsetStore:
             dict(zip(_OFFSETS_SCHEMA.names, (group_id, t, int(p), int(off), now, seq, metadata)))
             for (t, p), off in offsets.items()
         ]
-        # flock shared with compact(): a commit can't append into the
-        # directory while compact is atomically swapping it out. Crash
-        # recovery runs INSIDE the lock: a committer that merely checked
-        # before blocking could append into a directory a dying compactor
-        # had renamed away, recreating it with one row and making the
-        # next recovery discard every older commit as a stale backup.
-        with file_lock(self.store.warehouse / ".offsets.lock"):
-            self._recover()
+        with self._locked():
             self._write(self.path, rows)
 
     def compact(self) -> int:
@@ -159,15 +177,10 @@ class OffsetStore:
         from a maintenance hook keeps ``fetch()`` an O(#groups) scan
         instead of an O(#commits-ever) one. Returns the number of rows
         kept (0 = nothing to compact)."""
-        from .catalog import atomic_dir_swap, file_lock
-
-        with self._seq_lock, file_lock(self.store.warehouse / ".offsets.lock"):
-            self._recover()
+        with self._locked(rewrite=True):
             winners = self._latest(self._read())
             if winners:
-                tmp = self.store.warehouse / f".offsets-compact-{uuid.uuid4().hex[:8]}"
-                self._write(tmp, winners)
-                atomic_dir_swap(Path(self.path), tmp, self.store.warehouse / ".swap.lock")
+                self._swap_in(winners)
             return len(winners)
 
     def fetch(self, group_id: str) -> dict[tuple[str, int], int]:
@@ -178,10 +191,7 @@ class OffsetStore:
         between listing and read."""
         import pyarrow.dataset as ds
 
-        from .catalog import file_lock
-
-        with file_lock(self.store.warehouse / ".offsets.lock"):
-            self._recover()
+        with self._locked():
             rows = self._read(ds.field("group_id") == group_id)
         return {(r["topic"], r["partition"]): r["offset"] for r in self._latest(rows)}
 
@@ -193,10 +203,7 @@ class OffsetStore:
         in-memory ``GroupCoordinator.list_groups`` covers live-membership
         groups; this covers the broker-durable view, like listing groups
         from ``__consumer_offsets``.)"""
-        from .catalog import file_lock
-
-        with file_lock(self.store.warehouse / ".offsets.lock"):
-            self._recover()
+        with self._locked():
             return sorted({r["group_id"] for r in self._read()})
 
     def delete_group(self, group_id: str) -> int:
@@ -206,17 +213,12 @@ class OffsetStore:
         concurrent commit can't land in the directory being swapped out),
         which also compacts the surviving groups' rows. Returns the number
         of the group's commit rows removed."""
-        from .catalog import atomic_dir_swap, file_lock
-
-        with self._seq_lock, file_lock(self.store.warehouse / ".offsets.lock"):
-            self._recover()
+        with self._locked(rewrite=True):
             rows = self._read()
             keep = [r for r in rows if r["group_id"] != group_id]
             if len(keep) == len(rows):
                 return 0
-            tmp = self.store.warehouse / f".offsets-delg-{uuid.uuid4().hex[:8]}"
-            self._write(tmp, self._latest(keep))
-            atomic_dir_swap(Path(self.path), tmp, self.store.warehouse / ".swap.lock")
+            self._swap_in(self._latest(keep))
             return len(rows) - len(keep)
 
     def reset_offsets(

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -33,6 +32,7 @@ def main() -> None:
     variants = sys.argv[2].split(",")
     repeat = int(sys.argv[3]) if len(sys.argv) > 3 else 1
 
+    from bench import force
     from flux_spark.analytics.operators import basket_group, pairs_from_basket
     from flux_spark.session import get_spark
 
@@ -59,17 +59,12 @@ def main() -> None:
         )
 
     def packed_pairs(grouped):
-        anchors = grouped.select(
-            "__items", F.posexplode("__items").alias("__pos", "item_a")
-        )
-        return anchors.select(
+        # pack after the explode: a generator nested in an expression
+        # does not analyze
+        return anchors_pairs(grouped).select(
             (
                 F.shiftleft(F.col("item_a").cast("long"), 32)
-                + F.explode(
-                    F.expr(
-                        "slice(__items, __pos + 2, size(__items) - __pos - 1)"
-                    )
-                ).cast("long")
+                + F.col("item_b").cast("long")
             ).alias("__pk")
         )
 
@@ -79,6 +74,9 @@ def main() -> None:
             return li().distinct()
         if variant == "basket":
             return g
+        return pair_counts(variant, g).where(F.col("n_keys") >= 2)
+
+    def pair_counts(variant, g):
         if variant == "base":
             return pairs_from_basket(g)
         if variant == "repart":
@@ -106,17 +104,8 @@ def main() -> None:
 
     for r in range(repeat):
         for v in variants:
-            spark.sparkContext.setJobDescription(f"pairs_ab:{v}")
-            t0 = time.monotonic()
-            df = build(v)
-            if v not in ("scan", "basket"):
-                df = df.where(F.col("n_keys") >= 2)
-            df.write.format("noop").mode("overwrite").save()
-            print(
-                f"[{v}] run={r} ipn={ipn or 'default'} "
-                f"wall={time.monotonic()-t0:.2f}s",
-                flush=True,
-            )
+            wall = force(spark, lambda: build(v), f"pairs_ab:{v}")
+            print(f"[{v}] run={r} ipn={ipn or 'default'} wall={wall:.2f}s", flush=True)
             spark.catalog.clearCache()
     spark.stop()
 

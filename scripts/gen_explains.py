@@ -45,8 +45,8 @@ SHOWCASE = [
     ),
     (
         "emb_pq_codes",
-        "product quantization encode: one-row codebook broadcast, corpus "
-        "side never shuffles",
+        "product quantization encode: the driver-collected codebook ships "
+        "inside the Arrow distance kernel, corpus side never shuffles",
     ),
     (
         "emb_pq_adc_topk",
@@ -55,8 +55,9 @@ SHOWCASE = [
     ),
     (
         "emb_semantic_dedup",
-        "SemDeDup: broadcast centroid assignment, within-cluster-only "
-        "pair join keyed on cluster_id; Arrow-vectorized verify cosine",
+        "SemDeDup: Arrow-kernel centroid assignment, one cluster_id "
+        "shuffle into a grouped pandas verify (within-cluster pairs, no "
+        "pair join); verdicts broadcast into the final left join",
     ),
     (
         "events_grouping_sets",
@@ -83,8 +84,8 @@ SHOWCASE = [
     (
         "doc_dedup_incremental",
         "incremental dedup (r7): the store side is a parquet scan of "
-        "(doc_id, sig, bands) — old text is never re-read; band joins "
-        "are shuffle-hash, scale-safe at any store size",
+        "(doc_id, sig, bands) — old text is never re-read; each batch's "
+        "verdicts are localCheckpointed, so only their scans show below",
     ),
     (
         "emb_int8_topk",
@@ -124,14 +125,16 @@ SHOWCASE = [
         "emb_top_component",
         "distributed power iteration (late r8): per pass one corpus "
         "scan -> 64-group partial aggregate; covariance never "
-        "materializes and the iterate lives on the driver",
+        "materializes and the iterate lives on the driver (only the "
+        "result's scan shows below)",
     ),
     (
         "events_interval_overlap_join",
         "interval-overlap join (late r8): sessions explode to the 1 h "
         "time cells they span, probes map to exactly one cell, and the "
-        "range join becomes a shuffle EQUI-join on the cell key + exact "
-        "range filter — never BroadcastNestedLoopJoin",
+        "range join becomes an EQUI-join on the cell key + exact range "
+        "filter — never BroadcastNestedLoopJoin (broadcast at this size, "
+        "a shuffle join above the broadcast threshold)",
     ),
     (
         "events_distribution_drift",
@@ -150,7 +153,8 @@ SHOWCASE = [
         "persisted IVF lifecycle (late r8): postings written "
         "partitionBy(bucket); the probed-bucket set inlines as an isin "
         "literal so the query-time scan partition-prunes to nprobe/K of "
-        "the index bytes",
+        "the index bytes (the result is localCheckpointed before the "
+        "index is removed, so only its scan shows below)",
     ),
     (
         "doc_line_dedup",
@@ -184,7 +188,8 @@ SHOWCASE = [
         "events_rolling_distinct_7d",
         "rolling HLL distinct (r8 s5): daily registers partial-aggregate "
         "map-side once; every trailing window MAX-merges 256-row "
-        "register sets — raw events are scanned exactly once",
+        "register sets in a range join over the registers; events are "
+        "scanned 3x: days, registers and the exact COUNT(DISTINCT) leg",
     ),
     (
         "doc_bm25_retrieval",
@@ -205,7 +210,8 @@ SHOWCASE = [
         "from the shared basket build (one (order, part) shuffle with "
         "map-side collect_set, JVM-side pair explode — no DISTINCT "
         "shuffle, no self-join; r9 sf30 fix, 428 -> 114 s), degrees "
-        "broadcast onto edges, DECIMAL cross-product scalars at the end",
+        "broadcast onto edges, DECIMAL cross-product scalars at the end "
+        "(the sums are localCheckpointed; only the projection shows)",
     ),
     (
         "doc_pack_sequences",
@@ -237,10 +243,11 @@ SHOWCASE = [
     ),
     (
         "doc_containment_auto",
-        "df-winnowed containment (r11): the derived max_doc_freq filter "
-        "joins the exploded shingles against the RARE-shingle set before "
-        "the inverted-index self-join — candidate volume <= cap x corpus "
-        "(linear), denominators keep the full per-doc shingle counts",
+        "df-winnowed containment (r11): one shuffle into per-shingle "
+        "posting lists; the derived max_doc_freq bound is a size filter "
+        "on the list and pairs explode within each rare list (no join) — "
+        "candidate volume <= cap x corpus (linear), denominators keep "
+        "the full per-doc shingle counts",
     ),
     (
         "doc_dedup_minhash_collapse",
@@ -257,10 +264,26 @@ SHOWCASE = [
         "each vector through ceil(sqrt(K)) proximity-grouped branch "
         "representatives then scores only 2 branches' fine centroids — "
         "ONE narrow corpus pass (no join, no window) feeding the "
-        "persisted assignment that both pair-join sides and the final "
-        "left join reuse; n*~3sqrt(K) where flat scoring is n*K",
+        "persisted assignment that the grouped per-cluster verify and "
+        "the final left join read; n*~3sqrt(K) where flat scoring is n*K",
     ),
 ]
+
+
+def drop_initial_plans(plan: str) -> str:
+    """Drop every AQE "== Initial Plan ==" section, nested ones (cached
+    relations) too; a section ends at a line no deeper than its header."""
+    out, cut = [], None
+    for line in plan.splitlines():
+        col = len(line) - len(line.lstrip(" :"))
+        if cut is not None and col > cut:
+            continue
+        cut = None
+        if line.strip() == "+- == Initial Plan ==":
+            cut = col
+        else:
+            out.append(line)
+    return "\n".join(out).rstrip()
 
 
 def main() -> None:
@@ -296,9 +319,11 @@ def main() -> None:
         else:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         df = registry[name](spark, sf_dir)
-        df.count()
+        # collect() runs df's own plan, so AQE finalizes it; count() and
+        # a noop write execute a derived plan and leave df's non-final
+        df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
-        final = plan.split("== Initial Plan ==")[0].rstrip()
+        final = drop_initial_plans(plan)
         out += [f"## {name}", "", f"*{why}*", "", "```", final, "```", ""]
     with open(
         os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "EXPLAINS.md"),

@@ -95,6 +95,7 @@ def test_query_persists_release_on_clear_cache(spark, sf_dir, monkeypatch):
     basket build, near-dup signature path) and asserts the persistent-RDD
     registry returns to its baseline."""
     import __spark_entry__ as entry
+    import bench
 
     from flux_spark.llm import similarity_queries, text_queries
 
@@ -112,9 +113,7 @@ def test_query_persists_release_on_clear_cache(spark, sf_dir, monkeypatch):
         "orders_association_rules",
         "emb_semantic_dedup_auto",
     ):
-        qs[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        bench.force(spark, lambda: qs[name](spark, sf_dir), name)
 
     assert jsc.getPersistentRDDs().size() > before  # persists were live
     spark.catalog.clearCache()
@@ -134,3 +133,55 @@ def test_input_bytes_sizes_uri_paths(spark, sf_dir):
     assert input_bytes(uri, "events") == local
     with pytest.raises(RuntimeError, match="nosuch.parquet"):
         input_bytes(uri, "nosuch")
+
+
+def test_run_queries_harness(spark, sf_dir, tmp_path, monkeypatch, capsys):
+    """``scripts/run_queries.py`` resolves ``headline`` to the bench
+    headline, rejects an unknown name before a session starts, prints one
+    line per run plus the TSV table, writes ``--plan`` files, and reports a
+    failing query as FAIL with exit code 1 while the sweep goes on."""
+    import importlib.util
+    import os
+
+    import bench
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts", "run_queries.py")
+    spec = importlib.util.spec_from_file_location("run_queries", path)
+    rq = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(rq)
+
+    assert rq.resolve("headline", entry_mod.queries()) == bench.ANALYTICS_HEADLINE
+
+    def no_session(*a, **k):
+        raise AssertionError("session started before the names were checked")
+
+    monkeypatch.setattr(rq, "get_spark", no_session)
+    with pytest.raises(SystemExit, match="no_such_query"):
+        rq.main([sf_dir, "q1_pricing_summary,no_such_query"])
+
+    monkeypatch.setattr(rq, "get_spark", lambda *a, **k: spark)
+    plan_dir = tmp_path / "plans"
+    code = rq.main([sf_dir, "q1_pricing_summary", "--repeat", "2", "--plan", str(plan_dir)])
+    out = capsys.readouterr().out
+    assert code == 0
+    assert [ln.split(" wall=")[0] for ln in out.splitlines() if ln.startswith("[")] == [
+        "[q1_pricing_summary] run=0",
+        "[q1_pricing_summary] run=1",
+    ]
+    plan = (plan_dir / "q1_pricing_summary.txt").read_text()
+    assert "pre-execution plan" in plan and "Scan parquet" in plan
+    header, row = out.splitlines()[-2:]
+    assert header.split("\t") == ["name", "min_s", "median_s", *rq.SHAPE_COLUMNS]
+    assert row.split("\t")[0] == "q1_pricing_summary" and row.split("\t")[4] == "1"
+
+    def broken(spark, sf_dir):
+        raise RuntimeError("boom\nsecond line")
+
+    registry = {**entry_mod.queries(), "q3_shipping_priority": broken}
+    monkeypatch.setattr(rq.entry, "queries", lambda: registry)
+    code = rq.main([sf_dir, "q3_shipping_priority,q1_pricing_summary"])
+    lines = capsys.readouterr().out.splitlines()
+    assert code == 1
+    assert "FAIL q3_shipping_priority: boom" in lines
+    assert any(ln.startswith("[q1_pricing_summary] run=0 wall=") for ln in lines)
+    assert lines[-2].split("\t") == ["q3_shipping_priority", "-", "-"]

@@ -4,7 +4,7 @@
 PY ?= python
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: test oracle bench perfbench smoke
+.PHONY: test oracle bench perfbench smoke ab
 
 # The ROADMAP tier-1 command, plus the 25 slowest tests for the wall-time
 # record.
@@ -29,6 +29,57 @@ bench:
 perfbench:
 	$(PY) -m pytest perfbench/tests -q
 	$(PY) perfbench/run.py --workload log_tail --seed 1
+
+# Interleaved A/B of the gated benchmark against an older revision:
+#   make ab BASE=<rev> WORKLOAD=log_tail SEEDS="1 2 3 4 5 6 7 8 9 10"
+# BASE is checked out as a git worktree under .bench_build/; each seed runs
+# perfbench/run.py --trace 0 once in each tree, BASE first on odd seeds.
+# Prints one line per run, then each side's medians and, per metric, in
+# how many pairs the working tree was better (lower); each run's whole
+# output (every metric by name) stays in $(AB_DIR)/<side>-<seed>.txt.
+BASE ?= HEAD
+WORKLOAD ?= log_tail
+SEEDS ?= 1 2 3 4 5 6 7 8 9 10
+AB_DIR = .bench_build/ab
+
+define AB_SUMMARY
+import json, statistics, sys
+seeds, names = sys.argv[1].split(), ("setup_s", "unit_s", "op_p50_ms")
+runs = {}
+for s in seeds:
+    for side in ("base", "change"):
+        with open(f"$(AB_DIR)/{side}-{s}.txt") as f:
+            r = json.loads(f.read().strip().splitlines()[-1])
+        runs[side, s] = r
+        m = "  ".join(f"{n} {r['metrics'][n]['value']:.4f}" for n in names)
+        print(f"seed {s:>3} {side:<6} correct {r['correct']} failed {r['failed']}  {m}")
+for side in ("base", "change"):
+    cols = []
+    for n in names:
+        v = [runs[side, s]["metrics"][n]["value"] for s in seeds]
+        q1, q2, q3 = statistics.quantiles(v, n=4) if len(v) > 1 else v * 3
+        cols.append(f"{n} {q2:.4f} (IQR {q3 - q1:.4f})")
+    print(f"median {side:<6} " + "  ".join(cols))
+for n in names:
+    k = sum(runs["change", s]["metrics"][n]["value"] < runs["base", s]["metrics"][n]["value"] for s in seeds)
+    print(f"{n}: change better in {k}/{len(seeds)}")
+endef
+export AB_SUMMARY
+
+ab:
+	git worktree remove --force .bench_build/base 2>/dev/null || true
+	git worktree prune
+	git worktree add --detach .bench_build/base $(BASE)
+	rm -rf $(AB_DIR) && mkdir -p $(AB_DIR)
+	for s in $(SEEDS); do \
+	  if [ $$((s % 2)) -eq 1 ]; then order="base change"; else order="change base"; fi; \
+	  for side in $$order; do \
+	    dir=.; [ $$side = base ] && dir=.bench_build/base; \
+	    (cd $$dir && $(PY) perfbench/run.py --workload $(WORKLOAD) --seed $$s --trace 0 \
+	      2>/dev/null) > $(AB_DIR)/$$side-$$s.txt; \
+	  done; \
+	done
+	$(PY) -c "$$AB_SUMMARY" "$(SEEDS)"
 
 # Cheap regression net: every registry query executes at sf0.001.
 smoke:

@@ -436,7 +436,7 @@ def main() -> None:
             fast_ms.append(dt_ms)
     fast_ms.sort()
     # r12 third row (VERDICT r11 #3): the fast lane through the CONSUMER
-    # API — FluxConsumer.poll() itself serves small drains via read_since
+    # API — FluxConsumer.poll() itself serves small drains via read_ranges
     # (positions/commit/group semantics included), so a queue user no
     # longer drops to the LogStore to reach the ms class. The round trip
     # is fast produce -> poll -> .rows (plain Python; the DataFrame is

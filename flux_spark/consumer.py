@@ -10,7 +10,8 @@ written and read on the driver with pyarrow — latest-wins per (group, topic,
 partition) on (commit time, seq), so commits are blind appends at any scale.
 
 A poll reads ``[position, hwm)`` of each assigned (topic, partition), on
-the driver for a few thousand records or as one Spark scan above that;
+the driver into one Arrow table up to ``_DRIVER_POLL_MAX_RECORDS`` new
+records or as one Spark scan above that;
 both prune to partition dirs + offset ranges, so poll cost tracks the
 amount of *new* data, not log size (the reference's index-seek property,
 README.md:198).
@@ -41,7 +42,7 @@ from pyspark.sql.types import (
 from .coordinator import GroupCoordinator
 from .errors import RebalanceInProgressError, UnknownMemberError
 from .log import LogStore
-from .schema import RECORD_SCHEMA
+from .schema import RECORD_ARROW_SCHEMA
 
 _OFFSETS_SCHEMA = StructType(
     [
@@ -286,18 +287,18 @@ class OffsetStore:
 # the driver can hold. Poll latency in ms, accessor included (``.records``
 # = a noop write): 4 vCPUs, ``local[2]``, keyed 3-partition topic written
 # in 2,500-record flushes, lanes interleaved, median of 5 runs (a second
-# set of 7 at 2.5k / 5k / 10k gave the same order):
+# set at 10k / 25k / 50k gave the same order; at 50,000 Spark builds
+# ``.records`` first, 181 against 197):
 #
 #   records | .rows driver | .rows Spark | .records driver | .records Spark
-#     2,500 |           52 |         341 |             143 |            258
-#     5,000 |           90 |         339 |             185 |            218
-#    10,000 |          211 |         529 |             345 |            311
-#    25,000 |          520 |         838 |             695 |            318
-#   250,000 |        4,714 |       5,287 |           6,010 |            667
+#     2,500 |           25 |         120 |              40 |             90
+#     5,000 |           48 |         141 |              46 |             92
+#    10,000 |           99 |         192 |              60 |            103
+#    25,000 |          255 |         389 |             120 |            133
+#   250,000 |        2,498 |       2,951 |           1,027 |            448
 #
 # The bound is the largest size where the driver lane wins on both.
-_DRIVER_POLL_MAX_RECORDS = 5_000
-_RECORD_ARROW_SCHEMA = to_arrow_schema(RECORD_SCHEMA)
+_DRIVER_POLL_MAX_RECORDS = 25_000
 
 
 class PollResult:
@@ -305,40 +306,41 @@ class PollResult:
     shape whichever lane served the poll: ``rows`` (dicts, the shape
     ``LogStore.read_since`` returns), ``records`` (a RECORD_SCHEMA
     DataFrame), ``count``, ``should_continue`` (``count > 0``) and
-    ``lane`` (``"driver"`` or ``"spark"``). The accessor the lane does not
-    hold is built lazily: ``records`` from one Arrow table of the rows,
-    ``rows`` through ``records.toArrow()``. Lane parity is oracle-gated
+    ``lane`` (``"driver"`` or ``"spark"``). Both accessors are built
+    lazily from what the lane holds: on the driver lane one Arrow table
+    (``rows`` is its ``to_pylist()``, ``records`` its
+    ``createDataFrame``), on the Spark lane the scan (``rows`` through
+    ``records.toArrow()``). Lane parity is oracle-gated
     (``log_consumer_fast_poll_parity``)."""
 
     def __init__(
         self,
         lane: str,
         count: int,
-        rows: "list[dict] | None" = None,
+        table=None,
         records: DataFrame | None = None,
         spark=None,
     ):
         self.lane = lane
         self.count = count
         self.should_continue = count > 0
-        self._dicts = rows
+        self._table = table
         self._df = records
         self._spark = spark
+        self._dicts: list[dict] | None = None
 
     @property
     def rows(self) -> list[dict]:
         if self._dicts is None:
-            self._dicts = self._df.toArrow().to_pylist()
+            table = self._table if self._table is not None else self._df.toArrow()
+            self._dicts = table.to_pylist()
         return self._dicts
 
     @property
     def records(self) -> DataFrame:
         if self._df is None:
-            import pyarrow as pa
-
-            self._df = self._spark.createDataFrame(
-                pa.Table.from_pylist(self._dicts, schema=_RECORD_ARROW_SCHEMA)
-            )
+            # one Arrow batch per file would be one Spark partition each
+            self._df = self._spark.createDataFrame(self._table.combine_chunks())
         return self._df
 
     def __repr__(self) -> str:
@@ -351,7 +353,7 @@ class PollResult:
         if not isinstance(other, PollResult):
             return NotImplemented
         return (self.lane, self.count) == (other.lane, other.count) and (
-            self._dicts == other._dicts
+            self._table.equals(other._table)
             if self.lane == "driver"
             else self._df is other._df
         )
@@ -591,23 +593,22 @@ class FluxConsumer:
         """Fetch all records in ``[position, hwm)`` for every assigned
         partition; advance positions; signal end-of-log when nothing new.
 
-        The read plan (positions, pause, pagination) comes from catalog
-        metadata and is shared by both lanes. At most
-        ``_DRIVER_POLL_MAX_RECORDS`` new records (an empty poll included)
-        are read on the driver, one ``LogStore.read_since`` per partition
-        with ``read()``'s visibility contract; more run one Spark scan.
-        The Spark lane advances positions at plan time; the driver lane
-        only once its read delivered every planned record, so a driver
-        poll that raises leaves positions where they were and a plain
-        re-poll is safe."""
+        The read plan (positions, pause, pagination) comes from one
+        catalog read per topic and is shared by both lanes: per topic,
+        ``{partition: (start, end)}`` with each end at or below the hwm
+        just read. At most ``_DRIVER_POLL_MAX_RECORDS`` new records (an
+        empty poll included) are read on the driver, one
+        ``LogStore.read_ranges`` per topic, whose ends are the visibility
+        clamp; more run one Spark scan. The Spark lane advances positions
+        at plan time; the driver lane only once its read delivered every
+        planned record, so a driver poll that raises leaves positions
+        where they were and a plain re-poll is safe."""
         self._ensure_live()
-        plan: list[tuple[str, dict[int, int], dict[int, int]]] = []
+        plan: dict[str, dict[int, tuple[int, int]]] = {}
         new_positions = dict(self._positions)
         total_new = 0
         for t, parts in self._assignment.items():
             hwm = self.store.high_water_marks(t)
-            starts: dict[int, int] = {}
-            ends: dict[int, int] = {}
             for p in parts:
                 if (t, p) in self._paused:
                     continue
@@ -616,22 +617,15 @@ class FluxConsumer:
                 if max_records_per_partition is not None:
                     end = min(end, pos + max_records_per_partition)
                 if end > pos:
-                    starts[p] = pos
-                    ends[p] = end
+                    plan.setdefault(t, {})[p] = (pos, end)
                     new_positions[(t, p)] = end
                     total_new += end - pos
-            if starts:
-                plan.append((t, starts, ends))
         if total_new <= _DRIVER_POLL_MAX_RECORDS:
-            rows: list[dict] = []
-            for t, starts, ends in plan:
-                for p in sorted(starts):
-                    rows.extend(
-                        self.store.read_since(
-                            t, p, starts[p], max_records=ends[p] - starts[p]
-                        )
-                    )
-            if len(rows) != total_new:
+            import pyarrow as pa
+
+            tables = [self.store.read_ranges(t, ranges) for t, ranges in plan.items()]
+            table = pa.concat_tables(tables or [RECORD_ARROW_SCHEMA.empty_table()])
+            if table.num_rows != total_new:
                 # An under-delivering read (pruning bug, a file removed
                 # by a compaction swap between planning and read) must
                 # not skip records silently. The Spark lane surfaces
@@ -639,17 +633,20 @@ class FluxConsumer:
                 # equally loud, before positions move.
                 raise RuntimeError(
                     f"fast poll under-delivered: planned {total_new} "
-                    f"records, read {len(rows)}; positions not advanced "
-                    "— re-poll"
+                    f"records, read {table.num_rows}; positions not "
+                    "advanced — re-poll"
                 )
             self._positions = new_positions
-            return PollResult("driver", total_new, rows=rows, spark=self.store.spark)
+            return PollResult("driver", total_new, table=table, spark=self.store.spark)
         self._positions = new_positions
         frames = [
             self.store.read(
-                t, partitions=sorted(starts), start_offsets=starts, end_offsets=ends
+                t,
+                partitions=sorted(ranges),
+                start_offsets={p: s for p, (s, _) in ranges.items()},
+                end_offsets={p: e for p, (_, e) in ranges.items()},
             )
-            for t, starts, ends in plan
+            for t, ranges in plan.items()
         ]
         df = frames[0]
         for f in frames[1:]:

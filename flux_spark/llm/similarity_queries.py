@@ -573,8 +573,18 @@ def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook = e.where(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("code_id"), "embedding"
     )
-    return similarity.pq_encode(e, codebook).select(
-        "vec_id", "recon_err", F.posexplode("codes").alias("sub_idx", "code")
+    # a plain posexplode lets Spark infer size(codes) > 0 below the
+    # Generate, which evaluates the _dists kernel a second time; the outer
+    # form infers nothing, and the filter above it still drops NULL and
+    # empty codes
+    return (
+        similarity.pq_encode(e, codebook)
+        .select(
+            "vec_id",
+            "recon_err",
+            F.posexplode_outer("codes").alias("sub_idx", "code"),
+        )
+        .where(F.col("sub_idx").isNotNull())
     )
 
 

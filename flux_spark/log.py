@@ -63,7 +63,7 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 from .catalog import Catalog, atomic_dir_swap
 from .errors import InvalidTopicError, ValidationError
 from .routing import assign_partitions
-from .schema import RECORD_SCHEMA, STORED_FILE_SCHEMA
+from .schema import RECORD_ARROW_SCHEMA, RECORD_SCHEMA, STORED_FILE_SCHEMA
 
 # stored columns + the Hive-style partition-dir column
 READ_SCHEMA = StructType(
@@ -85,6 +85,18 @@ def _offset_stats(rg) -> tuple[int, int] | None:
             st = col.statistics
             return (st.min, st.max) if st is not None and st.has_min_max else None
     return None
+
+
+def _conform(chunk, arrow_type):
+    """One column chunk of a segment in RECORD_SCHEMA's Arrow type. Fast
+    segments' headers differ only in field nullability, which a cast
+    refuses and a zero-copy view takes; Spark-lane timestamps carry no
+    zone (INT96 holds a UTC instant) and are cast."""
+    if chunk.type == arrow_type:
+        return chunk
+    if arrow_type.equals(RECORD_ARROW_SCHEMA.field("headers").type):
+        return chunk.view(arrow_type)
+    return chunk.cast(arrow_type)
 
 
 class LogStore:
@@ -605,6 +617,91 @@ class LogStore:
         )
         return rows[0] if rows else None
 
+    def read_ranges(
+        self, topic: str, ranges: dict[int, tuple[int, int]]
+    ) -> "pyarrow.Table":
+        """Driver-side read of ``[start, end)`` of each partition in
+        ``ranges`` (``{partition: (start, end)}``): one ``pyarrow.Table`` in
+        RECORD_SCHEMA's Arrow schema, partitions ascending, offsets
+        ascending within each — the millisecond twin of
+        ``read(start_offsets=..., end_offsets=...)``.
+
+        The ends are the visibility clamp and no catalog read happens here,
+        so pass ends at or below a high-water mark just read (a poll plan's
+        are). Each partition directory is listed once. A fast segment named
+        by its offset range is skipped by name when it lies outside the
+        range; other files are pruned by their footer's ``offset``
+        statistics (the reference's IndexEntries, IndexEntries.java:17-54),
+        and only a file whose kept row groups straddle a bound is filtered
+        row by row. A file that fails to open is skipped: an in-flight file
+        lies above the hwm by construction, and a file a compaction swap
+        just removed makes the read come up short, which
+        ``FluxConsumer.poll`` raises on."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        self._recover_swap(topic)
+        root = self.topic_path(topic)
+        stored = list(RECORD_ARROW_SCHEMA)[2:]  # the columns a segment holds
+        chunks: dict[str, list] = {name: [] for name in RECORD_ARROW_SCHEMA.names}
+        for p, (lo, hi) in sorted(ranges.items()):
+            if hi <= lo:
+                continue
+            pdir = f"{root}/partition={p}"
+            try:
+                names = sorted(os.listdir(pdir))
+            except FileNotFoundError:  # nothing written yet, or mid-swap
+                continue
+            pieces = []
+            for name in names:
+                if not name.endswith(".parquet") or name.startswith(("_", ".")):
+                    continue
+                named = _FAST_SEGMENT.fullmatch(name)
+                if named and (int(named[2]) < lo or int(named[1]) >= hi):
+                    continue
+                try:
+                    # INT96 (Spark-lane) timestamps hold microseconds
+                    pf = pq.ParquetFile(
+                        f"{pdir}/{name}", coerce_int96_timestamp_unit="us"
+                    )
+                except Exception:
+                    continue
+                keep, inside = [], True
+                for rg in range(pf.metadata.num_row_groups):
+                    span = _offset_stats(pf.metadata.row_group(rg))
+                    if span is None:
+                        keep.append(rg)
+                        inside = False
+                    elif span[1] >= lo and span[0] < hi:
+                        keep.append(rg)
+                        inside = inside and lo <= span[0] and span[1] < hi
+                if not keep:
+                    continue
+                piece = pf.read_row_groups(keep, use_threads=False)
+                if not inside:
+                    off = pc.field("offset")
+                    piece = piece.filter((off >= lo) & (off < hi))
+                if piece.num_rows:
+                    pieces.append(piece)
+            # every writer sorts a file by offset and files hold disjoint
+            # ranges, so ordering the files orders the partition
+            pieces.sort(key=lambda t: t["offset"][0].as_py())
+            for piece in pieces:
+                for field in stored:
+                    chunks[field.name] += [
+                        _conform(c, field.type) for c in piece[field.name].chunks
+                    ]
+            n = sum(t.num_rows for t in pieces)
+            if n:
+                chunks["partition"].append(pa.repeat(pa.scalar(p, pa.int32()), n))
+        total = sum(len(c) for c in chunks["partition"])
+        chunks["topic"] = [pa.repeat(pa.scalar(topic, pa.string()), total)]
+        return pa.Table.from_arrays(
+            [pa.chunked_array(chunks[f.name], f.type) for f in RECORD_ARROW_SCHEMA],
+            schema=RECORD_ARROW_SCHEMA,
+        )
+
     def read_since(
         self,
         topic: str,
@@ -612,33 +709,13 @@ class LogStore:
         offset: int,
         max_records: int | None = None,
     ) -> list[dict]:
-        """Low-latency tail read for fresh appends — the fast-path twin of
-        ``read(start_offsets=...)`` that answers in milliseconds instead of
-        a Spark-job floor.
-
-        A queue user polling for records they *just* produced is reading a
-        metadata-sized tail of ONE partition; launching a distributed scan
-        for that is the wrong execution model. This path stays entirely on
-        the driver: list only the ``partition=<p>`` directory, prune by
-        name first — an offset-named fast segment whose range ends below
-        ``offset`` or starts at or above the high-water mark is skipped
-        without being opened — then skip whole files/rowgroups of the
-        remaining files via the Parquet footer min/max statistics on the
-        sorted ``offset`` column (the same index the reference keeps as
-        IndexEntries, IndexEntries.java:17-54 — here read directly instead
-        of through a Spark scan), and decode only the surviving rowgroups
-        with pyarrow. Files without a range in their name (Spark-lane,
-        maintenance and older fast-lane output) go straight to the footer.
-
-        Visibility contract is IDENTICAL to ``read()``: committed records
-        only — rows at or above the catalog high-water mark (a torn
-        append's tail) are filtered out, fast segments above it are never
-        opened, and other files that fail to open are skipped: an
-        in-flight file lies above the hwm by construction, and a file
-        removed by a concurrent compaction swap makes the read come up
-        short, which ``FluxConsumer.poll`` detects and raises on. The
-        equivalence is oracle-gated (``log_read_since_fastpath``) and
-        measured as the second latency row of bench.py.
+        """Tail read of one partition from ``offset`` up to the catalog
+        high-water mark, at most ``max_records`` records: the
+        one-partition wrapper of :meth:`read_ranges` with ``read()``'s
+        visibility contract (the hwm is the end, so a torn append's tail
+        stays hidden). The equivalence is oracle-gated
+        (``log_read_since_fastpath``) and measured as the second latency
+        row of bench.py.
 
         Returns ``list[dict]`` in ascending offset order with the
         RECORD_SCHEMA fields (topic, partition, offset, timestamp, key,
@@ -646,56 +723,12 @@ class LogStore:
         the fast path is to never touch the JVM. Timestamps are UTC-aware
         ``datetime`` values whichever lane wrote the segment.
         """
-        from datetime import timezone
-
-        import pyarrow.parquet as pq
-
-        meta = self.catalog.get_topic(topic)
-        self._recover_swap(topic)
-        hwm = meta.next_offset(int(partition))
-        lo = int(offset)
-        if lo >= hwm:
-            return []
-        pdir = Path(self.topic_path(topic)) / f"partition={int(partition)}"
-        recs: list[dict] = []
-        if pdir.is_dir():
-            for fp in sorted(pdir.iterdir()):
-                if not fp.name.endswith(".parquet") or fp.name.startswith(
-                    ("_", ".")
-                ):
-                    continue
-                named = _FAST_SEGMENT.fullmatch(fp.name)
-                if named and (int(named[2]) < lo or int(named[1]) >= hwm):
-                    continue
-                try:
-                    pf = pq.ParquetFile(fp)
-                except Exception:
-                    # a writer-in-flight partial file (above the hwm by
-                    # construction, commit-then-visible) or one a
-                    # compaction swap just removed (the read comes up
-                    # short and FluxConsumer.poll raises)
-                    continue
-                for rg in range(pf.metadata.num_row_groups):
-                    span = _offset_stats(pf.metadata.row_group(rg))
-                    if span is not None and (span[1] < lo or span[0] >= hwm):
-                        continue
-                    for rec in pf.read_row_group(rg).to_pylist():
-                        if lo <= rec["offset"] < hwm:
-                            rec["topic"] = topic
-                            rec["partition"] = int(partition)
-                            ts = rec.get("timestamp")
-                            if hasattr(ts, "to_pydatetime"):
-                                # ns arrow timestamps surface as pandas ones
-                                ts = ts.to_pydatetime()
-                            if ts is not None and ts.tzinfo is None:
-                                # Spark-written INT96: a zone-less UTC instant
-                                ts = ts.replace(tzinfo=timezone.utc)
-                            rec["timestamp"] = ts
-                            recs.append(rec)
-        recs.sort(key=lambda r: r["offset"])
+        p = int(partition)
+        hwm = self.catalog.get_topic(topic).next_offset(p)
+        table = self.read_ranges(topic, {p: (int(offset), hwm)})
         if max_records is not None:
-            recs = recs[:max_records]
-        return recs
+            table = table.slice(0, max_records)
+        return table.to_pylist()
 
     def high_water_marks(self, topic: str) -> dict[int, int]:
         """Next-offset-to-assign per partition, from the catalog."""

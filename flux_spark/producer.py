@@ -42,6 +42,7 @@ class FluxProducer:
         self.store = store
         self.batch_size = batch_size
         self._buffers: dict[str, list[dict]] = {}
+        self._topics: set[str] = set()  # checked against the catalog
         self._seq = itertools.count()
         self._lock = threading.Lock()
 
@@ -57,9 +58,15 @@ class FluxProducer:
     ) -> None:
         """``headers`` is an ordered list of (key, value-bytes) pairs —
         repeated keys allowed, the reference's multimap semantics
-        (commons/headers/Headers.java:8-96)."""
-        if not self.store.catalog.topic_exists(topic):
-            raise InvalidTopicError(f"topic {topic!r} does not exist")
+        (commons/headers/Headers.java:8-96).
+
+        The first send to a topic checks it against the catalog and the
+        producer remembers it, as a Kafka client caches topic metadata;
+        a topic deleted later fails at :meth:`flush`."""
+        if topic not in self._topics:
+            if not self.store.catalog.topic_exists(topic):
+                raise InvalidTopicError(f"topic {topic!r} does not exist")
+            self._topics.add(topic)
         if value is None:
             raise ValueError("value is required")
         with self._lock:
@@ -79,13 +86,30 @@ class FluxProducer:
 
     def flush(self, topic: str | None = None) -> dict[str, dict[int, tuple[int, int]]]:
         """Drain buffered records into the log (scheduled-flush analog,
-        FluxProducer.java:62-64,110-245). Returns per-topic offset ranges."""
+        FluxProducer.java:62-64,110-245). Returns per-topic offset ranges.
+
+        A topic deleted since its first send fails here: every other
+        topic's records are still written, the deleted topics' records are
+        dropped, and ``InvalidTopicError`` names them; the producer forgets
+        them, so a later send to one fails at send again."""
         with self._lock:
             topics = [topic] if topic else list(self._buffers)
             drained = {t: self._buffers.pop(t, []) for t in topics}
-        return {
-            t: self.store.append_rows(t, rows) for t, rows in drained.items() if rows
-        }
+        ranges, missing = {}, []
+        for t, rows in drained.items():
+            if not rows:
+                continue
+            try:
+                ranges[t] = self.store.append_rows(t, rows)
+            except InvalidTopicError:
+                self._topics.discard(t)
+                missing.append(t)
+        if missing:
+            raise InvalidTopicError(
+                f"topics {missing} no longer exist; their buffered records "
+                "were dropped"
+            )
+        return ranges
 
     # -- bulk API (the Spark-native path) ---------------------------------
     def ingest(

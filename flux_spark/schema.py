@@ -6,6 +6,7 @@ producer/ProducerRecord.java:19-89 and consumer/ConsumerRecord.java:8-32.
 same ARRAY<STRUCT<key,value>> type as Spark's built-in Kafka source.
 """
 
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -38,6 +39,9 @@ RECORD_SCHEMA = StructType(
         StructField("headers", HEADER_TYPE, True),
     ]
 )
+
+# RECORD_SCHEMA in Arrow: the table a driver-side read returns
+RECORD_ARROW_SCHEMA = to_arrow_schema(RECORD_SCHEMA)
 
 # What is physically stored inside each parquet file: `partition` is a
 # Hive-style directory column (partition=N/) and `topic` is implied by the

@@ -46,7 +46,10 @@ SHOWCASE = [
     (
         "emb_pq_codes",
         "product quantization encode: the driver-collected codebook ships "
-        "inside the Arrow distance kernel, corpus side never shuffles",
+        "inside the Arrow distance kernel, corpus side never shuffles; "
+        "posexplode_outer under an explicit filter leaves Spark no size "
+        "filter to infer below the Generate, so the kernel runs once per "
+        "row (one ArrowEvalPython node)",
     ),
     (
         "emb_pq_adc_topk",

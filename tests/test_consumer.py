@@ -1066,27 +1066,92 @@ def test_fast_poll_under_delivery_keeps_positions(topic_store, monkeypatch):
     c = FluxConsumer(topic_store, group_id="g")
     c.subscribe(["t"])
     before = {p: c.position("t", p) for p in range(3)}
-    real = topic_store.read_since
+    real = topic_store.read_ranges
     dropped = []
 
     def lossy(*args, **kwargs):
-        recs = real(*args, **kwargs)
-        if recs and not dropped:
-            dropped.append(recs.pop())
-        return recs
+        table = real(*args, **kwargs)
+        if table.num_rows and not dropped:
+            dropped.append(table.slice(table.num_rows - 1))
+            table = table.slice(0, table.num_rows - 1)
+        return table
 
-    monkeypatch.setattr(topic_store, "read_since", lossy)
+    monkeypatch.setattr(topic_store, "read_ranges", lossy)
     with pytest.raises(RuntimeError, match="under-delivered"):
         c.poll()
     assert dropped
     assert {p: c.position("t", p) for p in range(3)} == before
-    monkeypatch.setattr(topic_store, "read_since", real)
+    monkeypatch.setattr(topic_store, "read_ranges", real)
     res = c.poll()
     assert res.lane == "driver" and res.count == 30
     got = [(r["partition"], r["offset"]) for r in res.rows]
     hwm = topic_store.high_water_marks("t")
     assert sorted(got) == [(p, o) for p in range(3) for o in range(hwm[p])]
     assert not c.poll().should_continue
+
+
+def _count_catalog_loads(monkeypatch) -> list[int]:
+    """Wrap ``Catalog._load`` (every catalog read parses the file through
+    it) and return a one-element call counter."""
+    from flux_spark.catalog import Catalog
+
+    calls = [0]
+    real = Catalog._load
+
+    def counting(self):
+        calls[0] += 1
+        return real(self)
+
+    monkeypatch.setattr(Catalog, "_load", counting)
+    return calls
+
+
+def test_send_checks_the_catalog_once_per_topic(topic_store, monkeypatch):
+    """A producer checks a topic against the catalog on its first send to
+    it and remembers it: 100 sends read the catalog once. A missing topic
+    still fails at send, and a topic deleted after the first send fails
+    at flush, which still writes the other topics' records and makes the
+    next send to the deleted topic fail at send again."""
+    from flux_spark.errors import InvalidTopicError
+
+    prod = FluxProducer(topic_store)
+    calls = _count_catalog_loads(monkeypatch)
+    for i in range(100):
+        prod.send("t", value=f"v{i}", key=f"k{i % 9}")
+    assert calls[0] == 1
+    with pytest.raises(InvalidTopicError):
+        prod.send("missing", value="v")
+    prod.flush()
+    monkeypatch.undo()
+
+    topic_store.catalog.create_topic("gone", 1)
+    prod.send("gone", value="v")
+    topic_store.delete_topic("gone")
+    prod.send("gone", value="w")  # remembered: no catalog read
+    prod.send("t", value="kept", key="k0")
+    with pytest.raises(InvalidTopicError, match="gone"):
+        prod.flush()
+    assert sum(topic_store.high_water_marks("t").values()) == 101
+    with pytest.raises(InvalidTopicError):
+        prod.send("gone", value="x")
+
+
+def test_driver_poll_reads_the_catalog_once(topic_store, monkeypatch):
+    """A driver poll with new records in every partition plans and reads
+    its whole plan on one catalog read: the plan's ends are the
+    visibility clamp, so the read does not parse the catalog again."""
+    fill(topic_store, 30)
+    c = FluxConsumer(topic_store, group_id="g")
+    c.subscribe(["t"])
+    hwm = topic_store.high_water_marks("t")
+    assert all(hwm[p] > 0 for p in range(3))
+    calls = _count_catalog_loads(monkeypatch)
+    res = c.poll()
+    assert (res.lane, res.count) == ("driver", 30)
+    assert calls[0] <= 1
+    assert sorted((r["partition"], r["offset"]) for r in res.rows) == [
+        (p, o) for p in range(3) for o in range(hwm[p])
+    ]
 
 
 def test_poll_lane_follows_the_record_bound(topic_store, monkeypatch):

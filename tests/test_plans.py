@@ -415,6 +415,9 @@ def test_pq_encode_broadcast_codebook_no_corpus_shuffle(spark, sf):
     assert "ArrowEvalPython" in plan
     for node in ("Exchange", "Join", "CartesianProduct"):
         assert node not in plan, plan
+    # the distance kernel runs once per corpus row: no inferred size
+    # filter below the Generate evaluates it a second time
+    assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_contamination_broadcasts_bench_never_shuffles_corpus(spark, sf):

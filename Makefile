@@ -4,7 +4,7 @@
 PY ?= python
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: test oracle bench perfbench smoke ab
+.PHONY: test durability oracle bench perfbench smoke ab
 
 # The ROADMAP tier-1 command, plus the 25 slowest tests for the wall-time
 # record.
@@ -12,6 +12,27 @@ test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors \
 	  -p no:cacheprovider --durations=25
+
+# The crash and concurrency set that any change to durable metadata (the
+# catalog, the replay files, the txn log, the offsets table, dir swaps)
+# must keep green.
+DURABILITY_TESTS = tests/test_catalog.py tests/test_txn.py \
+  tests/test_log.py::test_torn_append_retry_is_exactly_once \
+  tests/test_log.py::test_append_with_batch_id_is_idempotent \
+  tests/test_log.py::test_append_rows_idempotent_batch_id \
+  tests/test_log.py::test_catalog_keeps_one_batch_id_and_replay_file_keeps_the_window \
+  tests/test_log.py::test_crash_between_replay_write_and_catalog_save \
+  tests/test_log.py::test_recreated_topic_does_not_inherit_batch_ids \
+  tests/test_log.py::test_multiprocess_ingest_hammer \
+  tests/test_log.py::test_concurrent_soak_produce_consume_maintenance \
+  tests/test_log.py::test_concurrent_soak_fastlane_under_maintenance \
+  tests/test_log.py::test_topic_rewrite_crash_recovery \
+  tests/test_consumer.py::test_offsets_rewrite_crash_recovery \
+  tests/test_streaming.py::test_stream_ingest_replay_is_noop
+
+durability:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 1200 $(PY) -m pytest $(DURABILITY_TESTS) -q -p no:cacheprovider
 
 # Oracle sweep: every queries() entry vs its DuckDB twin at $(SF_DIR), or
 # only the entries named in ORACLES (make oracle ORACLES="q1 q2"). A full

@@ -6,16 +6,21 @@ metadata/snapshots/ClusterSnapshot.java) with a driver-side catalog persisted
 as JSON in the warehouse. Topic validation mirrors Broker.java:340-353:
 non-empty unique name, partitions >= 1, 0 <= replication_factor <= 3.
 
-Scale note: catalog state is O(#topics) — a few KB even with thousands of
-topics — so a JSON file with atomic replace is appropriate; on a real cluster
-this would live in a metastore / Delta commit log, and the high-water-mark map
-would be updated by the same transaction that commits data files. Writes are
-serialized by a per-process RLock AND a warehouse-level ``flock`` file lock,
-so two DRIVER PROCESSES sharing one warehouse cannot interleave the
-read-modify-write of the hwm (the lock auto-releases on process death —
-no stale-lock recovery needed). Ingest is additionally single-writer per
-topic (PartitionWriteManager.java:17-84 analog) via LogStore's per-topic
-thread + file locks.
+Scale note: catalog state is O(#topics x #partitions) — per topic its
+config, its hwm map and the ONE latest committed batch id — so a JSON file
+with atomic replace is appropriate; on a real cluster this would live in a
+metastore / Delta commit log, and the high-water-mark map would be updated
+by the same transaction that commits data files. The idempotent-produce
+replay window (older batch ids, FIFO-capped) lives in one file per topic
+under ``.batches/``, read only by :meth:`Catalog.batch_committed`, so hwm
+readers never parse it. The catalog, the replay files and the txn log
+(txn.py) are each a :class:`LockedJson`: writes are serialized by a
+per-process RLock AND a warehouse-level ``flock`` file lock, so two DRIVER
+PROCESSES sharing one warehouse cannot interleave a read-modify-write (the
+lock auto-releases on process death — no stale-lock recovery needed).
+Ingest is additionally single-writer per topic
+(PartitionWriteManager.java:17-84 analog) via LogStore's per-topic thread +
+file locks.
 """
 
 from __future__ import annotations
@@ -39,24 +44,20 @@ from .errors import (
 
 _CATALOG_FILE = "_catalog.json"
 _CATALOG_LOCK_FILE = ".catalog.lock"
-# Warehouse storage-format generation. Bumped to 2 when the per-topic
-# writer lock moved from <topic>/.ingest.lock to .locks/<topic>.lock (the
-# atomic-swap fix): a writer running the format-1 code locks the OLD path,
-# so format-1 and format-2 writers sharing a warehouse would not exclude
-# each other and could mint duplicate offsets during a rolling upgrade.
-# The marker makes that mix loud: format-2 code refuses any warehouse
-# whose catalog declares a different format. Catalogs written before the
-# marker existed carry no "format" key and are AMBIGUOUS — the marker
-# shipped at least one release after the lock move, so a keyless
-# warehouse may be either layout. _load backfills heuristically: a
-# format-1 writer leaves its lock at <topic>/.ingest.lock, so any such
-# file marks the warehouse format 1 (refused); otherwise it is accepted
-# as format 2 and stamped on next save.
-_WAREHOUSE_FORMAT = 2
+# Warehouse storage-format generation; code refuses any warehouse whose
+# catalog declares another (or no) format, so writers of two layouts never
+# share one. 2: the per-topic writer lock moved from <topic>/.ingest.lock to
+# .locks/<topic>.lock — format-1 and format-2 writers would lock different
+# files and could mint duplicate offsets. 3: the catalog keeps only each
+# topic's latest committed batch id and the replay window moved to
+# .batches/<topic>.json — a format-2 writer would miss displaced ids and
+# re-append a replayed batch.
+_WAREHOUSE_FORMAT = 3
 _TOPIC_NAME_RE = re.compile(r"^[A-Za-z0-9._-]+$")
-# committed-batch ids retained per topic for idempotent-produce replay
-# detection; FIFO-pruned so the catalog file stays O(KB). 4096 in-flight
-# retried batches per topic is far beyond any real producer's replay window.
+# committed-batch ids kept per topic in its replay file (beside the latest
+# one in the catalog) for idempotent-produce replay detection; FIFO-pruned.
+# 4096 in-flight retried batches per topic is far beyond any real
+# producer's replay window.
 _MAX_COMMITTED_BATCHES = 4096
 
 
@@ -144,6 +145,66 @@ def recover_dir_swap(live: Path, guard: Path) -> bool:
         return True
 
 
+@contextlib.contextmanager
+def lock_and_recover(lock: Path, live: Path, guard: Path):
+    """Hold the flock ``lock`` that serializes writers of directory
+    ``live``, with :func:`recover_dir_swap` run INSIDE it. A holder that
+    merely checked before blocking could act on a ``live`` that a dying
+    swap had renamed away meanwhile: a writer would recreate it with only
+    its own rows (the next recovery then discards the real data as a
+    stale backup), a reader would see no data, and a rollup refresh
+    would take it for never-written and replace the accumulated history.
+    Callers take their in-process lock first (flock conflicts between two
+    fds of one process too)."""
+    with file_lock(lock):
+        recover_dir_swap(live, guard)
+        yield
+
+
+class LockedJson:
+    """A JSON state file under a thread RLock plus a warehouse flock, read
+    whole and replaced atomically. ``read()`` needs no lock: a reader sees
+    either the old or the new file, never a torn one. ``lock`` is None
+    for a file only ever updated inside another LockedJson's update,
+    whose locks already serialize it."""
+
+    def __init__(self, path: Path, lock: Path | None, empty):
+        self.path = Path(path)
+        self._flock = lock
+        self._empty = empty
+        self._lock = threading.RLock()
+
+    def read(self) -> dict:
+        """The parsed state, or ``empty()`` if there is no file."""
+        try:
+            with open(self.path) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return self._empty()
+
+    @contextlib.contextmanager
+    def update(self):
+        """Take both locks and yield the state; a clean exit writes it back
+        with one (C-encoder) ``json.dumps`` and an atomic ``os.replace``."""
+        # file_lock is looked up at call time, so a wrapper installed on
+        # this module (the benchmark's lock timer) sees every acquire
+        flock = file_lock(self._flock) if self._flock else contextlib.nullcontext()
+        with self._lock, flock:
+            state = self.read()
+            yield state
+            self.path.parent.mkdir(parents=True, exist_ok=True)
+            fd, tmp = tempfile.mkstemp(
+                dir=self.path.parent, prefix=f".{self.path.stem}-"
+            )
+            try:
+                with os.fdopen(fd, "w") as f:
+                    f.write(json.dumps(state))
+                os.replace(tmp, self.path)
+            finally:
+                if os.path.exists(tmp):
+                    os.unlink(tmp)
+
+
 @dataclass
 class TopicMetadata:
     """FluxTopic + PartitionMetadata analog (commons/FluxTopic.java:7-16)."""
@@ -169,58 +230,47 @@ class Catalog:
     def __init__(self, warehouse: str | os.PathLike):
         self.warehouse = Path(warehouse)
         self.warehouse.mkdir(parents=True, exist_ok=True)
-        self._lock = threading.RLock()
-
-    @contextlib.contextmanager
-    def _xlock(self):
-        """Mutation guard: in-process RLock (serializes threads, and makes
-        the flock below safe — flock conflicts between two fds of ONE
-        process too) + warehouse flock (serializes processes)."""
-        with self._lock, file_lock(self.warehouse / _CATALOG_LOCK_FILE):
-            yield
+        self._file = LockedJson(
+            self.warehouse / _CATALOG_FILE,
+            self.warehouse / _CATALOG_LOCK_FILE,
+            lambda: {"topics": {}, "format": _WAREHOUSE_FORMAT},
+        )
 
     # -- persistence -------------------------------------------------------
-    @property
-    def _path(self) -> Path:
-        return self.warehouse / _CATALOG_FILE
-
-    def _load(self) -> dict:
-        if not self._path.exists():
-            return {"topics": {}, "format": _WAREHOUSE_FORMAT}
-        with open(self._path) as f:
-            state = json.load(f)
+    def _checked(self, state: dict) -> dict:
         fmt = state.get("format")
-        if fmt is None:
-            # keyless = pre-marker catalog: format 1 or 2 (see module
-            # comment). A format-1 writer's per-topic lock lives at
-            # <topic>/.ingest.lock; its presence means old-layout writers
-            # have used this warehouse -> refuse rather than risk the
-            # duplicate-offset hazard the marker exists to close.
-            old_locks = any(
-                (self.warehouse / t / ".ingest.lock").exists()
-                for t in state.get("topics", {})
-            )
-            fmt = 1 if old_locks else _WAREHOUSE_FORMAT
         if fmt != _WAREHOUSE_FORMAT:
             raise IncompatibleWarehouseError(
                 f"warehouse {self.warehouse} declares storage format {fmt}; "
-                f"this engine writes format {_WAREHOUSE_FORMAT} (writer-lock "
+                f"this engine writes format {_WAREHOUSE_FORMAT} (metadata "
                 f"layout changed — mixed-version writers cannot safely share "
                 f"a warehouse; migrate or upgrade all writers)"
             )
         return state
 
-    def _save(self, state: dict) -> None:
-        # Atomic replace so readers never see a torn file.
-        state["format"] = _WAREHOUSE_FORMAT
-        fd, tmp = tempfile.mkstemp(dir=self.warehouse, prefix=".catalog-")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(state, f, indent=1, sort_keys=True)
-            os.replace(tmp, self._path)
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+    def _load(self) -> dict:
+        return self._checked(self._file.read())
+
+    @contextlib.contextmanager
+    def _update(self):
+        """Locked read-modify-write of the catalog; a clean exit saves."""
+        with self._file.update() as state:
+            yield self._checked(state)
+
+    def _replay(self, name: str) -> LockedJson:
+        """The topic's replay window: batch ids displaced from the
+        catalog, oldest first. Only written inside :meth:`_update`, whose
+        locks serialize it — a flock of its own on ``.catalog.lock``
+        would deadlock against the one this process already holds."""
+        return LockedJson(
+            self.warehouse / ".batches" / f"{name}.json", None, lambda: {"ids": []}
+        )
+
+    @staticmethod
+    def _topic(state: dict, name: str) -> dict:
+        if name not in state["topics"]:
+            raise InvalidTopicError(f"topic {name!r} does not exist")
+        return state["topics"][name]
 
     @staticmethod
     def _to_meta(name: str, raw: dict) -> TopicMetadata:
@@ -255,10 +305,11 @@ class Catalog:
             raise ValidationError("num_partitions must be >= 1")
         if not (0 <= replication_factor <= 3):
             raise ValidationError("replication_factor must be in [0, 3]")
-        with self._xlock():
-            state = self._load()
+        with self._update() as state:
             if name in state["topics"]:
                 raise TopicExistsError(f"topic {name!r} already exists")
+            # a deleted topic's replay ids must not replay against this one
+            self._replay(name).path.unlink(missing_ok=True)
             state["topics"][name] = {
                 "num_partitions": num_partitions,
                 "replication_factor": replication_factor,
@@ -266,7 +317,6 @@ class Catalog:
                 "hwm": {},
                 "configs": {str(k): str(v) for k, v in (configs or {}).items()},
             }
-            self._save(state)
             # Eagerly create partition dirs like Partition.java:14-19 does
             # for log/index files.
             for p in range(num_partitions):
@@ -278,12 +328,10 @@ class Catalog:
     def delete_topic(self, name: str, drop_data: bool = False) -> None:
         """InMemoryTopicMetadataRepository.deleteTopic (44-49); the reference
         does no disk GC — data drop is opt-in here."""
-        with self._xlock():
-            state = self._load()
-            if name not in state["topics"]:
-                raise InvalidTopicError(f"topic {name!r} does not exist")
+        with self._update() as state:
+            self._topic(state, name)
             del state["topics"][name]
-            self._save(state)
+        self._replay(name).path.unlink(missing_ok=True)
         if drop_data:
             import shutil
 
@@ -310,10 +358,7 @@ class Catalog:
         return name in self._load()["topics"]
 
     def get_topic(self, name: str) -> TopicMetadata:
-        state = self._load()
-        if name not in state["topics"]:
-            raise InvalidTopicError(f"topic {name!r} does not exist")
-        return self._to_meta(name, state["topics"][name])
+        return self._to_meta(name, self._topic(self._load(), name))
 
     def list_topics(self) -> list[str]:
         """getActiveTopics (InMemoryTopicMetadataRepository.java:57-63)."""
@@ -337,18 +382,14 @@ class Catalog:
         """
         if new_total < 1:
             raise ValidationError("new_total must be >= 1")
-        with self._xlock():
-            state = self._load()
-            if name not in state["topics"]:
-                raise InvalidTopicError(f"topic {name!r} does not exist")
-            cur = state["topics"][name]["num_partitions"]
+        with self._update() as state:
+            cur = self._topic(state, name)["num_partitions"]
             if new_total <= cur:
                 raise ValidationError(
                     f"new_total ({new_total}) must exceed current partition "
                     f"count ({cur}); Kafka topics cannot shrink"
                 )
             state["topics"][name]["num_partitions"] = new_total
-            self._save(state)
             for p in range(cur, new_total):
                 (self.warehouse / name / f"partition={p}").mkdir(
                     parents=True, exist_ok=True
@@ -359,14 +400,10 @@ class Catalog:
         """Kafka alterConfigs analog: set one per-topic config entry
         (e.g. ``retention.ms``). Consumed by maintenance jobs like
         ``LogStore.apply_retention``."""
-        with self._xlock():
-            state = self._load()
-            if name not in state["topics"]:
-                raise InvalidTopicError(f"topic {name!r} does not exist")
-            state["topics"][name].setdefault("configs", {})[str(key)] = str(
+        with self._update() as state:
+            self._topic(state, name).setdefault("configs", {})[str(key)] = str(
                 value
             )
-            self._save(state)
 
     # -- hwm maintenance (called by LogStore under the ingest lock) --------
     def advance_hwm(
@@ -376,38 +413,32 @@ class Catalog:
         batch_id: str | None = None,
     ) -> None:
         """Advance the high-water marks; with ``batch_id``, record the
-        batch as committed IN THE SAME atomic catalog save — this is the
-        commit point of the idempotent-produce protocol (LogStore.append).
-        A crash before this save leaves neither the hwm advance nor the
-        batch marker; a crash after leaves both. There is no intermediate
-        state, so a same-batch_id retry can never re-append a batch whose
-        hwm already advanced (ADVICE r3: the old touch-file marker was
-        written after the hwm save, leaving a duplicate-visible window)."""
-        with self._xlock():
-            state = self._load()
-            if name not in state["topics"]:
-                raise InvalidTopicError(f"topic {name!r} does not exist")
-            topic = state["topics"][name]
+        batch as the topic's latest committed one IN THE SAME atomic
+        catalog save — this is the commit point of the idempotent-produce
+        protocol (LogStore.append). A crash before this save leaves
+        neither the hwm advance nor the batch marker; a crash after leaves
+        both. The id it displaces is appended to the topic's replay file
+        first, under the catalog lock: a crash between the two writes
+        leaves that id in both places (harmless) and the new batch
+        uncommitted, so its retry takes the intent path."""
+        with self._update() as state:
+            topic = self._topic(state, name)
             hwm = topic.setdefault("hwm", {})
             for p, nxt in new_next_offsets.items():
                 hwm[str(p)] = max(int(hwm.get(str(p), 0)), int(nxt))
             if batch_id is not None:
-                batches = topic.setdefault("committed_batches", {})
-                batches[str(batch_id)] = {
-                    str(p): int(nxt) for p, nxt in new_next_offsets.items()
-                }
-                while len(batches) > _MAX_COMMITTED_BATCHES:
-                    batches.pop(next(iter(batches)))  # FIFO prune (json
-                    # object order == insertion order)
-            self._save(state)
+                prev = topic.get("last_batch")
+                if prev is not None:
+                    with self._replay(name).update() as replay:
+                        replay["ids"].append(prev)
+                        del replay["ids"][:-_MAX_COMMITTED_BATCHES]  # FIFO
+                topic["last_batch"] = str(batch_id)
 
     def batch_committed(self, name: str, batch_id: str) -> bool:
         """True iff ``batch_id`` was committed to ``name`` by a prior
         :meth:`advance_hwm` (the replay-detection read of the idempotent
-        produce protocol)."""
-        state = self._load()
-        if name not in state["topics"]:
-            raise InvalidTopicError(f"topic {name!r} does not exist")
-        return str(batch_id) in state["topics"][name].get(
-            "committed_batches", {}
-        )
+        produce protocol): the latest id, else one in the replay file."""
+        batch_id = str(batch_id)
+        if self._topic(self._load(), name).get("last_batch") == batch_id:
+            return True
+        return batch_id in self._replay(name).read()["ids"]

@@ -79,18 +79,6 @@ class OffsetStore:
         self._seq = itertools.count()
         self._seq_lock = threading.Lock()
 
-    def _recover(self) -> bool:
-        """Restore an ``_offsets`` directory stranded by a compact/delete
-        rewrite that crashed between its two renames. Must run before any
-        read (which would silently see zero commits) and before any
-        commit (whose append would recreate the path empty, making a
-        later recovery discard the backup as stale)."""
-        from .catalog import recover_dir_swap
-
-        return recover_dir_swap(
-            Path(self.path), self.store.warehouse / ".swap.lock"
-        )
-
     @staticmethod
     def _write(directory: str | Path, rows: list[dict]) -> None:
         """One ``part-commit-<uuid>.parquet`` file holding ``rows``,
@@ -129,19 +117,19 @@ class OffsetStore:
 
     @contextlib.contextmanager
     def _locked(self, rewrite: bool = False):
-        """Hold the offsets flock with crash recovery run inside it; a
-        ``rewrite`` takes the in-process seq lock first. The flock keeps a
-        commit from appending into, and a fetch from listing, a directory
-        a rewrite is swapping out. Recovery runs INSIDE the lock: a
-        committer that merely checked before blocking could append into a
-        directory a dying rewrite had renamed away, recreating it with one
-        row and making the next recovery discard every older commit as a
-        stale backup."""
-        from .catalog import file_lock
+        """Hold the offsets flock with crash recovery run inside it
+        (:func:`~flux_spark.catalog.lock_and_recover`); a ``rewrite``
+        takes the in-process seq lock first. The flock keeps a commit from
+        appending into, and a fetch from listing, a directory a rewrite is
+        swapping out."""
+        from .catalog import lock_and_recover
 
         with self._seq_lock if rewrite else contextlib.nullcontext():
-            with file_lock(self.store.warehouse / ".offsets.lock"):
-                self._recover()
+            with lock_and_recover(
+                self.store.warehouse / ".offsets.lock",
+                Path(self.path),
+                self.store.warehouse / ".swap.lock",
+            ):
                 yield
 
     def _swap_in(self, rows: list[dict]) -> None:

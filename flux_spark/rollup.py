@@ -24,7 +24,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .catalog import atomic_dir_swap, file_lock, recover_dir_swap
+from .catalog import atomic_dir_swap, lock_and_recover, recover_dir_swap
 from .consumer import FluxConsumer
 from .log import LogStore
 
@@ -71,13 +71,11 @@ class ContinuousRollup:
         refresh. Single-maintainer is the normal deployment (Kafka
         Streams' one-task-per-store rule); the lock makes violations
         safe instead of silently corrupting."""
-        with file_lock(self.path.parent / f".{self.path.name}.lock"):
-            # recovery must run INSIDE the refresh lock: a refresher that
-            # merely checked before blocking could find the table missing
-            # (another refresher died mid-swap), take the never-refreshed
-            # branch, and silently replace the accumulated history with
-            # one poll window's partial sums
-            recover_dir_swap(self.path, self.store.warehouse / ".swap.lock")
+        with lock_and_recover(
+            self.path.parent / f".{self.path.name}.lock",
+            self.path,
+            self.store.warehouse / ".swap.lock",
+        ):
             return self._refresh_locked()
 
     def _refresh_locked(self) -> int:

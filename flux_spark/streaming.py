@@ -450,8 +450,10 @@ def stream_ingest(
     appended with ``batch_id="stream-<sink_id>-<n>"`` (sink id keyed by
     topic + checkpoint location, so two sinks never collide), riding
     LogStore.append's idempotent-produce protocol: the batch id commits in
-    the SAME atomic catalog save that advances the hwm, and a replay of a
-    half-written batch discards the torn files before re-appending — so
+    the SAME atomic catalog save that advances the hwm (the catalog keeps
+    the latest id, a per-topic replay file the 4,096 before it), and a
+    replay of a half-written batch discards the torn files before
+    re-appending — so
     replays are exactly-once with NO residual duplication window (the
     reference acks before fsync and drops batches after 3 retries,
     FluxProducer.java:229-233). Empty microbatches are skipped unmarked:

@@ -17,7 +17,7 @@ Spark's commit model:
   The (topic, partition, first_offset, last_offset) ranges of each append
   are recorded in the transaction log.
 * **Commit / abort markers** — a driver-side transaction log
-  (``warehouse/_txns.json``, atomic-replace JSON like the catalog) plays the
+  (``warehouse/_txns.json``, a ``LockedJson`` like the catalog) plays the
   role of Kafka's __transaction_state topic + per-segment aborted-txn index.
 * **read_committed** — ``LogStore.read(topic, read_committed=True)`` hides
   every offset range belonging to a transaction that is not committed
@@ -36,13 +36,10 @@ LSO advancing past completed transactions.
 
 from __future__ import annotations
 
-import contextlib
-import json
 import os
-import tempfile
-import threading
 from pathlib import Path
 
+from .catalog import LockedJson
 from .errors import FluxError
 
 _TXN_FILE = "_txns.json"
@@ -72,51 +69,26 @@ class TxnLog:
     def __init__(self, warehouse: str | os.PathLike):
         self.warehouse = Path(warehouse)
         self.warehouse.mkdir(parents=True, exist_ok=True)
-        self._lock = threading.RLock()
-
-    @contextlib.contextmanager
-    def _xlock(self):
-        """Thread RLock + warehouse flock: two driver processes sharing
-        the warehouse cannot interleave the txn log's read-modify-write
-        (same pattern as Catalog._xlock)."""
-        from .catalog import file_lock
-
-        with self._lock, file_lock(self.warehouse / ".txns.lock"):
-            yield
-
-    @property
-    def _path(self) -> Path:
-        return self.warehouse / _TXN_FILE
+        self._file = LockedJson(
+            self.warehouse / _TXN_FILE,
+            self.warehouse / ".txns.lock",
+            lambda: {"ids": {}, "txns": {}},
+        )
 
     def _load(self) -> dict:
-        if not self._path.exists():
-            return {"ids": {}, "txns": {}}
-        with open(self._path) as f:
-            return json.load(f)
-
-    def _save(self, state: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.warehouse, prefix=".txns-")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(state, f, indent=1, sort_keys=True)
-            os.replace(tmp, self._path)
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+        return self._file.read()
 
     # -- InitProducerId ------------------------------------------------
     def init_id(self, tid: str) -> int:
         """Bump the transactional id's epoch; abort its in-flight txn
         (zombie fencing — the old incarnation's unfinished work becomes
         permanently invisible to read_committed)."""
-        with self._xlock():
-            state = self._load()
+        with self._file.update() as state:
             ent = state["ids"].setdefault(tid, {"epoch": 0, "seq": 0})
             ent["epoch"] += 1
             for key, txn in state["txns"].items():
                 if key.startswith(f"{tid}#") and txn["status"] == "ongoing":
                     txn["status"] = "aborted"
-            self._save(state)
             return ent["epoch"]
 
     def current_epoch(self, tid: str) -> int:
@@ -124,8 +96,7 @@ class TxnLog:
 
     # -- per-transaction lifecycle -------------------------------------
     def begin(self, tid: str, epoch: int) -> str:
-        with self._xlock():
-            state = self._load()
+        with self._file.update() as state:
             self._check_epoch(state, tid, epoch)
             ent = state["ids"][tid]
             for key, txn in state["txns"].items():
@@ -137,18 +108,15 @@ class TxnLog:
             ent["seq"] += 1
             key = f"{tid}#{ent['seq']}"
             state["txns"][key] = {"status": "ongoing", "ranges": []}
-            self._save(state)
             return key
 
     def add_ranges(
         self, tid: str, epoch: int, key: str, ranges: list[tuple[str, int, int, int]]
     ) -> None:
-        with self._xlock():
-            state = self._load()
+        with self._file.update() as state:
             self._check_epoch(state, tid, epoch)
             txn = self._ongoing(state, key)
             txn["ranges"].extend([list(r) for r in ranges])
-            self._save(state)
 
     def add_offsets(
         self,
@@ -163,8 +131,7 @@ class TxnLog:
         and are applied to the offsets table only when the transaction
         commits. Re-sending for the same (group, topic, partition)
         overwrites — last call wins, like Kafka."""
-        with self._xlock():
-            state = self._load()
+        with self._file.update() as state:
             self._check_epoch(state, tid, epoch)
             txn = self._ongoing(state, key)
             rows = txn.setdefault("offsets", [])
@@ -179,7 +146,6 @@ class TxnLog:
                     rows[index[k]] = row
                 else:
                     rows.append(row)
-            self._save(state)
 
     def pending_committed_offsets(self) -> list[tuple[str, list]]:
         """(txn key, offset rows) for committed transactions whose
@@ -196,17 +162,14 @@ class TxnLog:
         ]
 
     def mark_offsets_applied(self, key: str) -> None:
-        with self._xlock():
-            state = self._load()
+        with self._file.update() as state:
             txn = state["txns"].get(key)
             if txn is not None and not txn.get("offsets_applied"):
                 txn["offsets_applied"] = True
-                self._save(state)
 
     def finish(self, tid: str, epoch: int, key: str, status: str) -> None:
         assert status in ("committed", "aborted")
-        with self._xlock():
-            state = self._load()
+        with self._file.update() as state:
             self._check_epoch(state, tid, epoch)
             txn = state["txns"].get(key)
             if txn is None:
@@ -218,7 +181,6 @@ class TxnLog:
                     f"transaction {key} is already {txn['status']}"
                 )
             txn["status"] = status
-            self._save(state)
 
     def _check_epoch(self, state: dict, tid: str, epoch: int) -> None:
         cur = state["ids"].get(tid, {}).get("epoch", 0)
@@ -255,8 +217,7 @@ class TxnLog:
         """GC committed transactions (their ranges are never consulted);
         returns the number dropped. Kafka analog: LSO moving past completed
         transactions lets the aborted-txn index stay small."""
-        with self._xlock():
-            state = self._load()
+        with self._file.update() as state:
             done = [
                 k
                 for k, t in state["txns"].items()
@@ -267,7 +228,6 @@ class TxnLog:
             ]
             for k in done:
                 del state["txns"][k]
-            self._save(state)
             return len(done)
 
 

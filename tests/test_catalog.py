@@ -85,9 +85,9 @@ def test_create_partitions_grow_only(catalog):
 def test_advance_hwm_cross_process_no_lost_updates(tmp_path):
     """TRUE multi-process race on the catalog's read-modify-write: two OS
     processes each advance the hwm 40 times; without the warehouse flock
-    in Catalog._xlock the interleaved load->save would lose updates. The
-    hwm is max-merged, so each process advances a DISTINCT partition and
-    every increment must survive."""
+    in the catalog's LockedJson.update the interleaved load->save would
+    lose updates. The hwm is max-merged, so each process advances a
+    DISTINCT partition and every increment must survive."""
     import subprocess
     import sys
     import textwrap
@@ -203,9 +203,10 @@ def test_delete_topic_drops_orphaned_swap_backup(tmp_path):
 
 def test_warehouse_format_marker_rejects_foreign_format(tmp_path):
     """The writer-lock layout changed at format 2 (flock moved out of the
-    topic dir); a warehouse declaring another format must be refused so
-    mixed-version writers can't silently share it and mint duplicate
-    offsets."""
+    topic dir) and the replay-window layout at format 3 (batch ids moved
+    out of the catalog); a warehouse declaring another format must be
+    refused so mixed-version writers can't silently share it and mint
+    duplicate offsets or re-append replayed batches."""
     import json
 
     from flux_spark.catalog import Catalog
@@ -214,20 +215,21 @@ def test_warehouse_format_marker_rejects_foreign_format(tmp_path):
     cat = Catalog(tmp_path)
     cat.create_topic("t", 1)
     state = json.loads((tmp_path / "_catalog.json").read_text())
-    assert state["format"] == 2
+    assert state["format"] == 3
 
-    state["format"] = 1
-    (tmp_path / "_catalog.json").write_text(json.dumps(state))
-    with pytest.raises(IncompatibleWarehouseError):
-        Catalog(tmp_path).get_topic("t")
+    for old in (1, 2):
+        state["format"] = old
+        (tmp_path / "_catalog.json").write_text(json.dumps(state))
+        with pytest.raises(IncompatibleWarehouseError):
+            Catalog(tmp_path).get_topic("t")
+        with pytest.raises(IncompatibleWarehouseError):
+            Catalog(tmp_path).create_topic("t2", 1)
 
 
-def test_keyless_catalog_backfills_format_from_lock_layout(tmp_path):
-    """Pre-marker catalogs carry no 'format' key and are ambiguous
-    (the marker shipped after the writer-lock move): a keyless warehouse
-    whose topics show the OLD lock path (<topic>/.ingest.lock) must be
-    refused as format 1; one without old locks is accepted as format 2
-    and stamped on the next save (ADVICE r5)."""
+def test_keyless_catalog_is_refused(tmp_path):
+    """A catalog without a 'format' key predates the marker, so it was
+    written by format-1 or format-2 code: refused like any foreign
+    format, whatever lock files the warehouse holds."""
     import json
 
     from flux_spark.catalog import Catalog
@@ -238,18 +240,5 @@ def test_keyless_catalog_backfills_format_from_lock_layout(tmp_path):
     state = json.loads((tmp_path / "_catalog.json").read_text())
     del state["format"]
     (tmp_path / "_catalog.json").write_text(json.dumps(state))
-
-    # no old-layout locks -> accepted, format re-stamped on save
-    c2 = Catalog(tmp_path)
-    assert c2.get_topic("t").num_partitions == 1
-    c2.create_topic("t2", 1)
-    assert json.loads((tmp_path / "_catalog.json").read_text())["format"] == 2
-
-    # a format-1 writer's lock file marks the warehouse as old-layout
-    state = json.loads((tmp_path / "_catalog.json").read_text())
-    del state["format"]
-    (tmp_path / "_catalog.json").write_text(json.dumps(state))
-    (tmp_path / "t").mkdir(exist_ok=True)
-    (tmp_path / "t" / ".ingest.lock").touch()
-    with pytest.raises(IncompatibleWarehouseError):
+    with pytest.raises(IncompatibleWarehouseError, match="format None"):
         Catalog(tmp_path).get_topic("t")

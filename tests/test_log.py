@@ -1450,6 +1450,90 @@ def test_append_rows_idempotent_batch_id(spark, store):
     assert store.read("fastidem").count() == 10
 
 
+def test_catalog_keeps_one_batch_id_and_replay_file_keeps_the_window(
+    store, monkeypatch
+):
+    """The catalog holds only a topic's latest committed batch id; the ids
+    it displaces go to the topic's replay file, pruned oldest first. Ids
+    ``b-0``..``b-11`` sort differently as strings than in commit order, so
+    the prune is pinned to commit order."""
+    import json
+
+    from flux_spark import catalog as catalog_mod
+
+    monkeypatch.setattr(catalog_mod, "_MAX_COMMITTED_BATCHES", 8)
+    store.catalog.create_topic("window", 2)
+    recs = [{"value": f"v{i}", "key": f"k{i}"} for i in range(4)]
+    ids = [f"b-{i}" for i in range(12)]
+    for b in ids:
+        assert store.append_rows("window", recs, batch_id=b)
+    text = (store.warehouse / "_catalog.json").read_text()
+    assert [b for b in ids if f'"{b}"' in text] == ["b-11"]
+    assert json.loads(text)["topics"]["window"]["last_batch"] == "b-11"
+    replay = json.loads((store.warehouse / ".batches" / "window.json").read_text())
+    assert replay["ids"] == ids[3:11]
+    for b in ids[-8:]:
+        assert store.append_rows("window", recs, batch_id=b) == {}
+    assert sum(store.high_water_marks("window").values()) == 12 * 4
+    # the oldest id was pruned: it appends again
+    assert store.append_rows("window", recs, batch_id="b-0")
+    assert sum(store.high_water_marks("window").values()) == 13 * 4
+
+
+def test_crash_between_replay_write_and_catalog_save(store, monkeypatch):
+    """A crash after the displaced id reaches the replay file but before
+    the catalog save leaves that id in both places and the new batch
+    uncommitted: the retry lands the batch exactly once and the displaced
+    id still replays as a no-op."""
+    import contextlib
+
+    store.catalog.create_topic("crash", 2)
+    recs = [{"value": f"v{i}", "key": f"k{i}"} for i in range(10)]
+    store.append_rows("crash", recs, batch_id="c-0")
+
+    real_replay = store.catalog._replay
+
+    class CrashAfterWrite:
+        def __init__(self, name):
+            self.file = real_replay(name)
+            self.read = self.file.read
+
+        @contextlib.contextmanager
+        def update(self):
+            with self.file.update() as state:
+                yield state
+            raise RuntimeError("simulated crash before catalog save")
+
+    monkeypatch.setattr(store.catalog, "_replay", CrashAfterWrite)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        store.append_rows("crash", recs, batch_id="c-1")
+    monkeypatch.undo()
+    assert "c-0" in store.catalog._replay("crash").read()["ids"]
+    assert sum(store.high_water_marks("crash").values()) == 10
+    assert store.read("crash", include_uncommitted=True).count() == 20
+
+    stats = store.append_rows("crash", recs, batch_id="c-1")
+    assert sum(hi - lo + 1 for lo, hi in stats.values()) == 10
+    assert store.append_rows("crash", recs, batch_id="c-0") == {}
+    assert store.append_rows("crash", recs, batch_id="c-1") == {}
+    assert store.read("crash").count() == 20
+    assert store.read("crash", include_uncommitted=True).count() == 20
+
+
+def test_recreated_topic_does_not_inherit_batch_ids(store):
+    """delete_topic then create_topic with the same name: batch ids of the
+    deleted topic, latest or displaced, append again."""
+    recs = [{"value": "v", "key": "k"}]
+    store.catalog.create_topic("again", 1)
+    store.append_rows("again", recs, batch_id="r-1")
+    store.append_rows("again", recs, batch_id="r-2")
+    store.delete_topic("again")
+    assert not (store.warehouse / ".batches" / "again.json").exists()
+    store.catalog.create_topic("again", 1)
+    assert store.append_rows("again", recs, batch_id="r-1") == {0: (0, 0)}
+    assert store.append_rows("again", recs, batch_id="r-2") == {0: (1, 1)}
+
+
 def test_producer_small_flush_takes_fastpath_and_headers_roundtrip(
     spark, store
 ):

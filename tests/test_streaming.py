@@ -176,8 +176,9 @@ def test_stream_session_counts(filled_store, spark):
 def test_stream_ingest_replay_is_noop(filled_store, spark, tmp_path):
     """Simulated crash between foreachBatch and checkpoint commit: delete
     the checkpoint's commit marker so Spark re-delivers batch 0 with the
-    same batch_id on restart — the sink-side _stream_commits marker must
-    make the replay a no-op (no duplicate records, hwm unchanged)."""
+    same batch_id on restart — the sink's batch id, committed with the hwm
+    advance (idempotent produce), must make the replay a no-op (no
+    duplicate records, hwm unchanged)."""
     import shutil
 
     filled_store.catalog.create_topic("replay-sink", 2)

@@ -14,8 +14,9 @@ test:
 	  -p no:cacheprovider --durations=25
 
 # The crash and concurrency set that any change to durable metadata (the
-# catalog, the replay files, the txn log, the offsets table, dir swaps)
-# must keep green.
+# catalog, the replay files, the txn log, the offsets table, dir swaps) or
+# to the segment index (torn tails, recovery, reads across a rewrite) must
+# keep green.
 DURABILITY_TESTS = tests/test_catalog.py tests/test_txn.py \
   tests/test_log.py::test_torn_append_retry_is_exactly_once \
   tests/test_log.py::test_append_with_batch_id_is_idempotent \
@@ -27,7 +28,16 @@ DURABILITY_TESTS = tests/test_catalog.py tests/test_txn.py \
   tests/test_log.py::test_concurrent_soak_produce_consume_maintenance \
   tests/test_log.py::test_concurrent_soak_fastlane_under_maintenance \
   tests/test_log.py::test_topic_rewrite_crash_recovery \
+  tests/test_log.py::test_recover_hwm_from_data \
+  tests/test_log.py::test_read_hides_torn_append_until_recovered \
+  tests/test_log.py::test_read_since_hides_torn_append \
+  tests/test_log.py::test_read_since_mixed_segment_layouts_match_spark_read \
+  tests/test_log.py::test_log_start_and_recovery_after_rewrite \
+  tests/test_log.py::test_segment_index_reads_offsets_of_a_file_without_statistics \
   tests/test_consumer.py::test_offsets_rewrite_crash_recovery \
+  tests/test_consumer.py::test_fast_poll_under_delivery_keeps_positions \
+  tests/test_consumer.py::test_driver_poll_consumes_compacted_topic \
+  tests/test_consumer.py::test_spark_poll_fails_loudly_when_planned_segment_disappears \
   tests/test_streaming.py::test_stream_ingest_replay_is_noop
 
 durability:

@@ -229,15 +229,12 @@ class OffsetStore:
         shifted targets are clamped into [log start, hwm] like the CLI.
         The computed targets are committed for the group and returned."""
         hwm = self.store.high_water_marks(topic)
-        # beginning_offsets scans the log for per-partition minimums; only
-        # the earliest / absolute / shift paths need it
-        begins: dict[int, int] | None = None
+        begins = self.store.beginning_offsets(topic)
 
         def clamp(p: int, o: int) -> int:
             return max(begins.get(p, 0), min(int(o), hwm[p]))
 
         if shift_by is not None:
-            begins = self.store.beginning_offsets(topic)
             cur = self.fetch(group_id)
             targets = {
                 p: clamp(p, cur.get((topic, p), begins.get(p, 0)) + shift_by)
@@ -245,14 +242,12 @@ class OffsetStore:
             }
             label = f"shift:{shift_by}"
         elif to == "earliest":
-            begins = self.store.beginning_offsets(topic)
             targets = begins
             label = "reset:earliest"
         elif to == "latest":
             targets = hwm
             label = "reset:latest"
         elif isinstance(to, int):
-            begins = self.store.beginning_offsets(topic)
             targets = {p: clamp(p, to) for p in hwm}
             label = f"reset:{to}"
         else:
@@ -298,8 +293,10 @@ class PollResult:
     lazily from what the lane holds: on the driver lane one Arrow table
     (``rows`` is its ``to_pylist()``, ``records`` its
     ``createDataFrame``), on the Spark lane the scan (``rows`` through
-    ``records.toArrow()``). Lane parity is oracle-gated
-    (``log_consumer_fast_poll_parity``)."""
+    ``records.toArrow()``). ``count`` is the number of offsets the poll
+    moved past: a range that key compaction emptied still counts, so a
+    ``while res.should_continue`` loop runs on to the high-water mark.
+    Lane parity is oracle-gated (``log_consumer_fast_poll_parity``)."""
 
     def __init__(
         self,
@@ -587,10 +584,12 @@ class FluxConsumer:
         just read. At most ``_DRIVER_POLL_MAX_RECORDS`` new records (an
         empty poll included) are read on the driver, one
         ``LogStore.read_ranges`` per topic, whose ends are the visibility
-        clamp; more run one Spark scan. The Spark lane advances positions
-        at plan time; the driver lane only once its read delivered every
-        planned record, so a driver poll that raises leaves positions
-        where they were and a plain re-poll is safe."""
+        clamp; more run one Spark scan. ``count`` is the offsets moved
+        past (``compact_by_key`` leaves gaps). The Spark lane advances
+        positions at plan time; the driver lane only once its read
+        returned, so a driver poll that raises (a file a swap removed
+        after the listing) leaves positions where they were and a plain
+        re-poll is safe."""
         self._ensure_live()
         plan: dict[str, dict[int, tuple[int, int]]] = {}
         new_positions = dict(self._positions)
@@ -613,17 +612,6 @@ class FluxConsumer:
 
             tables = [self.store.read_ranges(t, ranges) for t, ranges in plan.items()]
             table = pa.concat_tables(tables or [RECORD_ARROW_SCHEMA.empty_table()])
-            if table.num_rows != total_new:
-                # An under-delivering read (pruning bug, a file removed
-                # by a compaction swap between planning and read) must
-                # not skip records silently. The Spark lane surfaces
-                # such failures at action time — make the driver lane
-                # equally loud, before positions move.
-                raise RuntimeError(
-                    f"fast poll under-delivered: planned {total_new} "
-                    f"records, read {table.num_rows}; positions not "
-                    "advanced — re-poll"
-                )
             self._positions = new_positions
             return PollResult("driver", total_new, table=table, spark=self.store.spark)
         self._positions = new_positions

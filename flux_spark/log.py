@@ -18,9 +18,9 @@ under ``warehouse/<topic>/partition=<p>/``:
 * **LogSegment name -> offset-named fast segment**: the reference names each
   segment by its start offset (``{topic}_partition{p}_{startOffset}.log``,
   LogSegment.java:72-78). A fast-lane file carries its whole range,
-  ``part-fast-<first:020d>-<last:020d>-<uuid>.parquet``, so the driver-side
-  tail read skips it by name without opening its footer. Files named by
-  Spark (or by older releases) carry no range and are pruned by footer.
+  ``part-fast-<first:020d>-<last:020d>-<uuid>.parquet``; Spark-named files
+  give theirs by footer. Every driver-side read of the layout goes through
+  one segment index, ``LogStore._segments``, and starts no Spark job.
 
 Offset assignment (the one genuinely stateful primitive, SURVEY.md §4):
 per-(topic, partition) offsets are contiguous from 0 across appends. The
@@ -54,6 +54,7 @@ import os
 import re
 import threading
 import uuid
+from collections import namedtuple
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, Row, SparkSession, Window
@@ -76,15 +77,28 @@ _ARRIVAL = "__arrival"
 _FAST_SEGMENT = re.compile(r"part-fast-(\d{20})-(\d{20})-[0-9a-f]{32}\.parquet")
 
 
-def _offset_stats(rg) -> tuple[int, int] | None:
-    """``(min, max)`` of the ``offset`` column in one row group's footer
-    statistics, or None when the writer recorded no min/max."""
-    for ci in range(rg.num_columns):
-        col = rg.column(ci)
-        if col.path_in_schema == "offset":
-            st = col.statistics
-            return (st.min, st.max) if st is not None and st.has_min_max else None
-    return None
+def _offset_stats(pf) -> list[tuple[int, int, int]]:
+    """``(row group, min, max)`` of the ``offset`` column for each non-empty
+    row group of the open file ``pf``: its footer statistics, or the column
+    itself where the writer recorded no min/max."""
+    import pyarrow.compute as pc
+
+    spans = []
+    for g in range(pf.metadata.num_row_groups):
+        rg = pf.metadata.row_group(g)
+        cols = map(rg.column, range(rg.num_columns))
+        st = next(c for c in cols if c.path_in_schema == "offset").statistics
+        if st is not None and st.has_min_max:
+            spans.append((g, st.min, st.max))
+        elif rg.num_rows:
+            mm = pc.min_max(pf.read_row_group(g, columns=["offset"])["offset"])
+            spans.append((g, mm["min"].as_py(), mm["max"].as_py()))
+    return spans
+
+
+# a segment-index entry: offset range (None: unreadable), open footer (None:
+# not opened), (row group, min, max) of the row groups overlapping the range
+_Segment = namedtuple("_Segment", "path first last pf groups", defaults=(None, ()))
 
 
 def _conform(chunk, arrow_type):
@@ -611,6 +625,55 @@ class LogStore:
         )
         return rows[0] if rows else None
 
+    def _segments(self, topic: str, p: int, lo=0, hi=float("inf"), open_named=True):
+        """The segment index (the reference's segment names and
+        IndexEntries, LogSegment.java:72-78, IndexEntries.java:17-54): list
+        partition ``p``'s dir once and yield a :class:`_Segment` per file
+        holding an offset in ``[lo, hi)``. A fast segment's name gives its
+        range, so one outside is skipped unopened, and with
+        ``open_named=False`` one inside is yielded unopened. Other files'
+        ranges come from their footers. A file that fails to open is
+        yielded without a range; one gone by then raises
+        ``FileNotFoundError`` (a swap after the listing). A missing dir is
+        listed again under the swap guard, which a swap holds across its
+        renames; still missing, it holds nothing."""
+        import pyarrow.parquet as pq
+
+        pdir = f"{self.topic_path(topic)}/partition={p}"
+        try:
+            names = os.listdir(pdir)
+        except FileNotFoundError:  # nothing written yet, or mid-swap
+            from .catalog import file_lock
+
+            self._recover_swap(topic)
+            with file_lock(self.warehouse / ".swap.lock"):
+                if not os.path.isdir(pdir):
+                    return
+                names = os.listdir(pdir)
+        for name in names:
+            if not name.endswith(".parquet") or name.startswith(("_", ".")):
+                continue
+            named = _FAST_SEGMENT.fullmatch(name)
+            if named and (int(named[2]) < lo or int(named[1]) >= hi):
+                continue
+            path = f"{pdir}/{name}"
+            if named and not open_named:
+                yield _Segment(path, int(named[1]), int(named[2]))
+                continue
+            try:
+                # INT96 (Spark-lane) timestamps hold microseconds
+                pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
+                spans = _offset_stats(pf)
+            except FileNotFoundError:
+                raise
+            except Exception:  # torn or foreign bytes: no readable range
+                yield _Segment(path, None, None)
+                continue
+            groups = tuple(s for s in spans if s[2] >= lo and s[1] < hi)
+            if groups:
+                first, last = min(s[1] for s in spans), max(s[2] for s in spans)
+                yield _Segment(path, first, last, pf, groups)
+
     def read_ranges(
         self, topic: str, ranges: dict[int, tuple[int, int]]
     ) -> "pyarrow.Table":
@@ -622,58 +685,26 @@ class LogStore:
 
         The ends are the visibility clamp and no catalog read happens here,
         so pass ends at or below a high-water mark just read (a poll plan's
-        are). Each partition directory is listed once. A fast segment named
-        by its offset range is skipped by name when it lies outside the
-        range; other files are pruned by their footer's ``offset``
-        statistics (the reference's IndexEntries, IndexEntries.java:17-54),
-        and only a file whose kept row groups straddle a bound is filtered
-        row by row. A file that fails to open is skipped: an in-flight file
-        lies above the hwm by construction, and a file a compaction swap
-        just removed makes the read come up short, which
-        ``FluxConsumer.poll`` raises on."""
+        are). The files come from :meth:`_segments`; only row groups that
+        overlap the range are read, and only a file whose kept row groups
+        straddle a bound is filtered row by row. A file that fails to open
+        is skipped (an in-flight file lies above the hwm), and one a swap
+        removed after the listing raises, so a read never comes up short."""
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        self._recover_swap(topic)
-        root = self.topic_path(topic)
         stored = list(RECORD_ARROW_SCHEMA)[2:]  # the columns a segment holds
         chunks: dict[str, list] = {name: [] for name in RECORD_ARROW_SCHEMA.names}
         for p, (lo, hi) in sorted(ranges.items()):
             if hi <= lo:
                 continue
-            pdir = f"{root}/partition={p}"
-            try:
-                names = sorted(os.listdir(pdir))
-            except FileNotFoundError:  # nothing written yet, or mid-swap
-                continue
             pieces = []
-            for name in names:
-                if not name.endswith(".parquet") or name.startswith(("_", ".")):
+            for seg in self._segments(topic, p, lo, hi):
+                if seg.pf is None:
                     continue
-                named = _FAST_SEGMENT.fullmatch(name)
-                if named and (int(named[2]) < lo or int(named[1]) >= hi):
-                    continue
-                try:
-                    # INT96 (Spark-lane) timestamps hold microseconds
-                    pf = pq.ParquetFile(
-                        f"{pdir}/{name}", coerce_int96_timestamp_unit="us"
-                    )
-                except Exception:
-                    continue
-                keep, inside = [], True
-                for rg in range(pf.metadata.num_row_groups):
-                    span = _offset_stats(pf.metadata.row_group(rg))
-                    if span is None:
-                        keep.append(rg)
-                        inside = False
-                    elif span[1] >= lo and span[0] < hi:
-                        keep.append(rg)
-                        inside = inside and lo <= span[0] and span[1] < hi
-                if not keep:
-                    continue
-                piece = pf.read_row_groups(keep, use_threads=False)
-                if not inside:
+                kept = [g for g, _, _ in seg.groups]
+                piece = seg.pf.read_row_groups(kept, use_threads=False)
+                if not all(lo <= a and b < hi for _, a, b in seg.groups):
                     off = pc.field("offset")
                     piece = piece.filter((off >= lo) & (off < hi))
                 if piece.num_rows:
@@ -732,77 +763,56 @@ class LogStore:
     def beginning_offsets(self, topic: str) -> dict[int, int]:
         """Kafka ``beginningOffsets`` analog: earliest readable offset per
         partition. 0 for untouched partitions; after retention truncation
-        it is the first surviving record's offset; an empty (fully
+        or key compaction the first survivor's offset; an empty (fully
         truncated) partition reports its high-water mark — beginning ==
         end means nothing to read, matching Kafka's log-start-offset
-        semantics. One metadata-sized aggregation (min over the offset
-        column, rowgroup-stat friendly)."""
+        semantics. From the segment index, no Spark job: the smallest
+        first offset of a file starting below the hwm (a file wholly above
+        it is a torn, uncommitted tail)."""
         meta = self.catalog.get_topic(topic)
-        rows = (
-            self.read(topic)
-            .groupBy("partition")
-            .agg(F.min("offset").alias("mn"))
-            .collect()
-        )
-        out = {p: meta.next_offset(p) for p in meta.partition_ids()}
-        out.update({int(r["partition"]): int(r["mn"]) for r in rows})
+        out = {}
+        for p in meta.partition_ids():
+            hwm = meta.next_offset(p)
+            segs = self._segments(topic, p, 0, hwm, open_named=False)
+            out[p] = min((s.first for s in segs if s.first is not None), default=hwm)
         return out
 
     def discard_uncommitted(self, topic: str) -> int:
         """Crash recovery, discard flavor: delete data files lying entirely
         ABOVE the committed high-water mark — the leftovers of an append
-        that wrote its parquet files but died before ``advance_hwm``. The
-        complement of :meth:`recover_hwm_from_data` (which ADOPTS the torn
-        tail instead). Used by the idempotent-produce retry path so a
-        re-append cannot double-write offsets the torn attempt already
-        wrote.
+        that wrote its parquet files but died before ``advance_hwm`` — and
+        files that cannot be opened. The complement of
+        :meth:`recover_hwm_from_data` (which ADOPTS the torn tail instead).
+        Used by the idempotent-produce retry path so a re-append cannot
+        double-write offsets the torn attempt already wrote.
 
-        Driver-side and metadata-only: reads each file's parquet FOOTER
-        (rowgroup min stats on the offset column), never the data pages —
-        O(#files) small reads, same cost profile as a file listing. Only
-        call while holding the topic write lock (the retry path does).
+        Metadata-only, through the segment index (names, else footers).
+        Only call while holding the topic write lock (the retry path does).
 
         Returns the number of files removed.
         """
-        import pyarrow.parquet as pq
-
         meta = self.catalog.get_topic(topic)
         removed = 0
         for p in meta.partition_ids():
             hwm = meta.next_offset(p)
-            pdir = self.warehouse / topic / f"partition={p}"
-            if not pdir.is_dir():
-                continue
-            for f in pdir.glob("*.parquet"):
-                try:
-                    md = pq.read_metadata(f)
-                except Exception:  # truncated/torn file: also uncommitted
-                    f.unlink(missing_ok=True)
-                    removed += 1
-                    continue
-                mins = [
-                    span[0]
-                    for g in range(md.num_row_groups)
-                    if (span := _offset_stats(md.row_group(g))) is not None
-                ]
-                if mins and min(mins) >= hwm:
-                    f.unlink(missing_ok=True)
+            for seg in self._segments(topic, p, hwm, open_named=False):
+                if seg.first is None or seg.first >= hwm:
+                    Path(seg.path).unlink(missing_ok=True)
                     removed += 1
         return removed
 
     def recover_hwm_from_data(self, topic: str) -> dict[int, int]:
-        """Rebuild the high-water marks by scanning the log (crash recovery
-        for a lost catalog, or re-adopting a torn append's tail):
-        max(offset)+1 per partition over ALL on-disk records."""
+        """Rebuild the high-water marks from the files on disk (crash
+        recovery for a lost catalog, or re-adopting a torn append's tail):
+        max(offset)+1 per partition over every segment whose footer opens,
+        no Spark job. A crash can leave a partial fast segment under a
+        valid name, so a file that cannot be opened is skipped
+        (:meth:`discard_uncommitted` removes it)."""
         meta = self.catalog.get_topic(topic)
-        rows = (
-            self.read(topic, include_uncommitted=True)
-            .groupBy("partition")
-            .agg(F.max("offset").alias("mx"))
-            .collect()
-        )
-        recovered = {p: 0 for p in meta.partition_ids()}
-        recovered.update({int(r["partition"]): int(r["mx"]) + 1 for r in rows})
+        recovered = {}
+        for p in meta.partition_ids():
+            lasts = [s.last for s in self._segments(topic, p) if s.last is not None]
+            recovered[p] = max(lasts, default=-1) + 1
         self.catalog.advance_hwm(topic, recovered)
         return recovered
 
@@ -910,7 +920,7 @@ class LogStore:
             meta = self.catalog.get_topic(topic)
             n_files = max(
                 (
-                    len(list((self.warehouse / topic / f"partition={p}").glob("*.parquet")))
+                    sum(1 for _ in self._segments(topic, p, open_named=False))
                     for p in meta.partition_ids()
                 ),
                 default=0,

@@ -83,10 +83,10 @@ def run_consumer(
     spark = _spark(f"soak-cons-{group}")
     store = LogStore(spark, warehouse)
     # Under the default bound every drain this soak produces is read on
-    # the driver (poll() -> read_since): read_since skips a file a
-    # compaction swap just removed, poll() raises when the read comes up
-    # short, and the loop below re-polls, which is safe because a raising
-    # driver poll leaves positions unchanged. spark_lane=True sets the
+    # the driver (poll() -> read_ranges): the read raises when a file it
+    # listed is gone because a compaction swap removed it, and the loop
+    # below re-polls, which is safe because a raising driver poll leaves
+    # positions unchanged. spark_lane=True sets the
     # bound to 0, so every non-empty poll runs the Spark scan instead.
     if spark_lane:
         consumer_mod._DRIVER_POLL_MAX_RECORDS = 0

@@ -1059,35 +1059,85 @@ def test_fast_poll_commit_resume_cycle(topic_store):
 
 
 def test_fast_poll_under_delivery_keeps_positions(topic_store, monkeypatch):
-    """A fast poll whose read comes up one record short raises before it
+    """A segment the poll listed disappears before it is opened (a
+    compaction swap between listing and read): the poll raises before it
     moves any position, so a plain re-poll (no seek) delivers every
     record exactly once."""
+    import os
+
+    import pyarrow.parquet as pq
+
     fill(topic_store, 30)
     c = FluxConsumer(topic_store, group_id="g")
     c.subscribe(["t"])
     before = {p: c.position("t", p) for p in range(3)}
-    real = topic_store.read_ranges
-    dropped = []
+    real = pq.ParquetFile
+    gone = []
 
-    def lossy(*args, **kwargs):
-        table = real(*args, **kwargs)
-        if table.num_rows and not dropped:
-            dropped.append(table.slice(table.num_rows - 1))
-            table = table.slice(0, table.num_rows - 1)
-        return table
+    def vanishing(path, *args, **kwargs):
+        if not gone:
+            os.replace(path, f"{path}.gone")
+            gone.append(path)
+        return real(path, *args, **kwargs)
 
-    monkeypatch.setattr(topic_store, "read_ranges", lossy)
-    with pytest.raises(RuntimeError, match="under-delivered"):
+    monkeypatch.setattr(pq, "ParquetFile", vanishing)
+    with pytest.raises(FileNotFoundError):
         c.poll()
-    assert dropped
+    assert gone
     assert {p: c.position("t", p) for p in range(3)} == before
-    monkeypatch.setattr(topic_store, "read_ranges", real)
+    monkeypatch.setattr(pq, "ParquetFile", real)
+    os.replace(f"{gone[0]}.gone", gone[0])
     res = c.poll()
     assert res.lane == "driver" and res.count == 30
     got = [(r["partition"], r["offset"]) for r in res.rows]
     hwm = topic_store.high_water_marks("t")
     assert sorted(got) == [(p, o) for p in range(3) for o in range(hwm[p])]
     assert not c.poll().should_continue
+
+
+@pytest.mark.parametrize("page", [None, 8])
+def test_driver_poll_consumes_compacted_topic(store, page):
+    """``compact_by_key`` leaves offset gaps, so a planned range holds
+    fewer records than its width. A fresh group still gets each key's
+    survivor exactly once, and a paged loop runs through the page that
+    compaction emptied (offsets 0-7) on to the high-water mark."""
+    store.catalog.create_topic("kc", 1)
+    prod = FluxProducer(store)
+    for i in range(20):
+        prod.send("kc", value=f"v{i}", key=f"k{i % 5}")
+    prod.flush()
+    store.compact_by_key("kc")
+    c = FluxConsumer(store, group_id="fresh")
+    c.subscribe(["kc"])
+    got, counts = [], []
+    while (res := c.poll(max_records_per_partition=page)).should_continue:
+        assert res.lane == "driver"
+        counts.append(res.count)
+        got += [(r["offset"], r["key"], r["value"]) for r in res.rows]
+    assert got == [(15 + k, f"k{k}", f"v{15 + k}") for k in range(5)]
+    assert counts == ([20] if page is None else [8, 8, 4])
+    assert c.position("kc", 0) == store.high_water_marks("kc")[0] == 20
+
+
+def test_spark_poll_fails_loudly_when_planned_segment_disappears(
+    topic_store, monkeypatch
+):
+    """The Spark lane plans a lazy scan over the files listed at poll
+    time. A compaction that swaps them out before ``.records`` is forced
+    must make the force fail, not return fewer rows."""
+    from flux_spark import consumer as consumer_mod
+
+    monkeypatch.setattr(consumer_mod, "_DRIVER_POLL_MAX_RECORDS", 0)
+    fill(topic_store, 30)
+    c = FluxConsumer(topic_store, group_id="g")
+    c.subscribe(["t"])
+    res = c.poll()
+    assert res.lane == "spark" and res.count == 30
+    # the Spark lane moves positions at plan time, before any scan runs
+    assert sum(c.position("t", p) for p in range(3)) == 30
+    topic_store.compact("t")
+    with pytest.raises(Exception, match="(?i)not exist|FileNotFound"):
+        res.records.collect()
 
 
 def _count_catalog_loads(monkeypatch) -> list[int]:

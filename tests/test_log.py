@@ -1087,10 +1087,10 @@ def test_concurrent_soak_fastlane_under_maintenance(spark, store):
     maintenance contention. One committing group drains EVERY poll via
     the driver-side pyarrow lane (the default driver-poll bound is above
     the soak's 1,200 records) while producers write and an aggressive
-    compaction loop swaps segment directories underneath it. read_since
-    skips a file it cannot open (one a swap just removed), poll raises
-    when the read comes up short of its plan, and the child re-polls —
-    safe, because a raising fast poll leaves positions where they were.
+    compaction loop swaps segment directories underneath it. The read
+    raises when a file it listed is gone (a swap removed it), and the
+    child re-polls — safe, because a raising fast poll leaves positions
+    where they were.
     Proves that mechanism holds the same exactly-once, gap-free, zero-lag
     bar as the Spark lane — and asserts the polls actually WERE
     fast-lane served, so the test cannot silently degrade into
@@ -1322,6 +1322,116 @@ def test_read_since_timestamps_are_utc_aware_on_every_segment_layout(
     assert {r["offset"]: r["timestamp"] for r in got} == want
 
 
+def _spark_log_start(store, topic) -> dict[int, int]:
+    """Log start as one Spark aggregation: min committed offset per
+    partition, the hwm for a partition with no committed record."""
+    rows = store.read(topic).groupBy("partition").agg(F.min("offset")).collect()
+    return {**store.high_water_marks(topic), **{r[0]: r[1] for r in rows}}
+
+
+def _spark_recovered(store, topic) -> dict[int, int]:
+    """Recovered hwm as one Spark aggregation: max(offset) + 1 per
+    partition over every record on disk, 0 for a partition with none."""
+    rows = (
+        store.read(topic, include_uncommitted=True)
+        .groupBy("partition")
+        .agg(F.max("offset"))
+        .collect()
+    )
+    return {
+        **{p: 0 for p in store.high_water_marks(topic)},
+        **{r[0]: r[1] + 1 for r in rows},
+    }
+
+
+def _assert_index_matches(spark, store, topic, begins, recovered):
+    """``beginning_offsets`` and ``recover_hwm_from_data`` (run on a copy
+    of the warehouse, since it advances the hwm) give the Spark
+    references and start no Spark job."""
+    import shutil
+
+    from flux_spark.log import LogStore
+
+    got = []
+    assert _jobs_and_stages(
+        spark, lambda: got.append(store.beginning_offsets(topic))
+    ) == (0, 0)
+    assert got == [begins]
+    copy = store.warehouse.parent / f"copy-{topic}"
+    shutil.copytree(store.warehouse, copy)
+    twin = LogStore(spark, copy)
+    got = []
+    assert _jobs_and_stages(
+        spark, lambda: got.append(twin.recover_hwm_from_data(topic))
+    ) == (0, 0)
+    assert got == [recovered]
+
+
+def test_segment_index_reads_offsets_of_a_file_without_statistics(tmp_path):
+    """A file whose writer recorded no ``offset`` statistics (and whose
+    name carries no range) gets its range from its ``offset`` column: the
+    tail read, log start and recovery all see offsets 10-19 in it."""
+    import pyarrow.parquet as pq
+
+    from flux_spark.log import LogStore
+
+    store = LogStore(None, tmp_path / "warehouse")  # the index never touches Spark
+    store.catalog.create_topic("ns", 1)
+    for b in range(3):
+        rows = [{"value": f"v{b}-{i}", "partition": 0} for i in range(10)]
+        store.append_rows("ns", rows)
+    pdir = tmp_path / "warehouse" / "ns" / "partition=0"
+    (mid,) = pdir.glob("part-fast-00000000000000000010-*.parquet")
+    table = pq.read_table(mid)
+    mid.unlink()
+    bare = pdir / "part-00000-nostats.parquet"
+    pq.write_table(table, bare, write_statistics=False, row_group_size=4)
+    assert not pq.read_metadata(bare).row_group(0).column(0).is_stats_set
+    assert [r["offset"] for r in store.read_since("ns", 0, 12)] == list(range(12, 30))
+    assert store.beginning_offsets("ns") == {0: 0}
+    (first,) = pdir.glob("part-fast-00000000000000000000-*.parquet")
+    first.unlink()
+    assert store.beginning_offsets("ns") == {0: 10}
+    (last,) = pdir.glob("part-fast-00000000000000000020-*.parquet")
+    last.unlink()
+    assert store.recover_hwm_from_data("ns") == {0: 20}
+
+
+@pytest.mark.parametrize("rewrite", ["truncate", "compact_by_key"])
+def test_log_start_and_recovery_after_rewrite(spark, store, rewrite):
+    """After ``truncate_before`` (partition 0 to its hwm, partition 1 half
+    way) or ``compact_by_key``, the segment index's log start and
+    recovered hwm equal the Spark aggregations, and discarding the torn
+    tail removes nothing else."""
+    topic = "rw"
+    store.catalog.create_topic(topic, 3)
+    store.append_rows(
+        topic, [{"value": f"v{i}", "key": f"k{i % 7}"} for i in range(40)]
+    )
+    store.append(topic, _mk_records(spark, 30), ordering_col="seq")
+    store.append_rows(
+        topic, [{"value": f"w{i}", "key": f"k{i % 7}"} for i in range(20)]
+    )
+    hwm = store.high_water_marks(topic)
+    if rewrite == "truncate":
+        store.truncate_before(topic, {0: hwm[0], 1: hwm[1] // 2})
+    else:
+        store.compact_by_key(topic)
+    begins, recovered = _spark_log_start(store, topic), _spark_recovered(store, topic)
+    if rewrite == "truncate":
+        assert begins[0] == hwm[0] and begins[1] == hwm[1] // 2
+        assert begins[2] == 0 and recovered[0] == 0
+    else:
+        assert all(0 < begins[p] < hwm[p] for p in hwm)
+        assert recovered == hwm
+    _assert_index_matches(spark, store, topic, begins, recovered)
+    removed = []
+    assert _jobs_and_stages(
+        spark, lambda: removed.append(store.discard_uncommitted(topic))
+    ) == (0, 0)
+    assert removed == [0]
+
+
 def test_read_since_mixed_segment_layouts_match_spark_read(
     spark, store, monkeypatch
 ):
@@ -1329,8 +1439,10 @@ def test_read_since_mixed_segment_layouts_match_spark_read(
     segments, a Spark-lane append file, a legacy ``part-fast-<uuid>``
     file, an offset-named torn flush above the hwm, and an offset-named
     file of garbage bytes above the hwm. read_since must equal the Spark
-    read for every start offset, and discard_uncommitted must remove both
-    files above the hwm."""
+    read for every start offset, beginning_offsets and
+    recover_hwm_from_data must equal their Spark aggregations (the
+    recovery adopts the torn flush and skips the garbage), and
+    discard_uncommitted must remove both files above the hwm."""
     import uuid
     from pathlib import Path
 
@@ -1371,9 +1483,11 @@ def test_read_since_mixed_segment_layouts_match_spark_read(
     assert any(pdir.glob(f"part-fast-{hwm:020d}-*.parquet"))
 
     los = (0, 1, hwm // 2, hwm - 1, hwm, hwm + 5)
-    # the Spark reference is taken before the garbage file lands: a Spark
-    # scan cannot read a file that is not Parquet, read_since never opens
-    # one named above the hwm
+    # the Spark references are taken before the garbage file lands: a Spark
+    # scan cannot read a file that is not Parquet, the segment index skips
+    # one named above the hwm or that fails to open
+    begins, recovered = _spark_log_start(store, topic), _spark_recovered(store, topic)
+    assert begins == {0: 0} and recovered == {0: hwm + 4}
     want = {
         lo: [
             (r["offset"], r["key"], r["value"])
@@ -1394,8 +1508,13 @@ def test_read_since_mixed_segment_layouts_match_spark_read(
         ]
         assert got == want[lo], lo
     assert [o for o, _, _ in want[0]] == list(range(hwm))
+    _assert_index_matches(spark, store, topic, begins, recovered)
 
-    assert store.discard_uncommitted(topic) == 2
+    removed = []
+    assert _jobs_and_stages(
+        spark, lambda: removed.append(store.discard_uncommitted(topic))
+    ) == (0, 0)
+    assert removed == [2]
     assert not garbage.exists()
     assert not any(pdir.glob(f"part-fast-{hwm:020d}-*.parquet"))
     assert [r["offset"] for r in store.read_since(topic, 0, 0)] == list(
